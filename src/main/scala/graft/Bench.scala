@@ -109,8 +109,8 @@ object Bench {
     // copy becomes unparseable (BENCH_r04.json "parsed": null). Also
     // write the full line to a repo file so the complete per-query
     // numbers survive the round regardless of capture width.
-    try Files.write(Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "BENCH_FULL.json")), (line + "\n").getBytes("UTF-8"))
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
+    try Files.write(Paths.get(outFile), (line + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () } // stdout line remains the contract
     // The driver stores only the final 2000 bytes of stdout and the
     // 121-query line above is ~2.8 KB, so the stored copy has been
@@ -120,8 +120,8 @@ object Bench {
     // complete JSON summary as the LAST stdout line, so the captured
     // tail always contains one parseable line. Same total, same timed
     // region; the full per-query map stays on the line above and in
-    // BENCH_FULL.json.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${ok.size},"n_errors":${outcomes.size - ok.size},"queries_file":"BENCH_FULL.json","sf":"$sfDir","reps":$reps,"stat":"min","drive":"materialize"}""")
+    // the file it was written to (queries_file).
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${ok.size},"n_errors":${outcomes.size - ok.size},"queries_file":"${esc(outFile)}","sf":"$sfDir","reps":$reps,"stat":"min","drive":"materialize"}""")
     spark.stop()
   }
 
@@ -198,10 +198,10 @@ object Bench {
     val total = results.values.sum
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","reps":$reps,"stat":"min","mode":"fork","drive":"materialize"}"""
     println(line)
-    try Files.write(Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "BENCH_FORK.json")), (line + "\n").getBytes("UTF-8"))
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FORK.json")
+    try Files.write(Paths.get(outFile), (line + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
     // same compact tail-friendly last line as suite mode (see main)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"queries_file":"BENCH_FORK.json","sf":"$sfDir","reps":$reps,"stat":"min","mode":"fork","drive":"materialize"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"queries_file":"${esc(outFile)}","sf":"$sfDir","reps":$reps,"stat":"min","mode":"fork","drive":"materialize"}""")
   }
 }

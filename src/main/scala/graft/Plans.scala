@@ -94,11 +94,11 @@ object Plans {
       "aggregate -> rate table joined back on the group key with NO hint (AQE " +
       "broadcasts it only while it fits — domain cardinality is unbounded at " +
       "host granularity); the keep test is a scan-stage hash threshold.", true),
-    ("q_lm_score", "Two-pass self-trained LM: model/context/vocab branches each " +
-      "re-read the COLUMN-PRUNED scan (pruning makes the subplans distinct, so " +
-      "no exchange reuse — re-scanning pruned parquet beats materializing the " +
-      "full-text shuffle); all three model tables are alphabet-bounded true " +
-      "dims; decimal-exact per-doc accumulation.", false),
+    ("q_lm_score", "Self-trained char-bigram LM on the DSIR engine: an eager " +
+      "dsir_model_agg job trains the model, so this plan is the scoring pass " +
+      "alone — round-robin exchange, bigram_counts + dsir_score fold over a " +
+      "literal nll map, one doc-keyed partial aggregate; no explode, no join, " +
+      "no per-row decimal.", false),
     ("q_keywords", "ONE corpus exchange: raw text hash-partitioned on the doc " +
       "id, reused by the tf and df branches (identical column sets); tf, the " +
       "per-doc dedup, and the top-k heap (TopKRewrite → topk_rows) all run " +
@@ -111,7 +111,7 @@ object Plans {
       "est_jaccard computes inside the join stage and each pair emits once " +
       "from its first agreeing band — no distinct, no per-pair sig re-attach; " +
       "every exchange corpus-linear), exact-Jaccard confirmation kernel, " +
-      "iterative min-label components over the CONFIRMED pairs only (the " +
+      "large-star/small-star components over the CONFIRMED pairs only (the " +
       "tiny graph, not the corpus), and a left join folding survivors back.", true),
     ("q_token_budget", "Corpus reduces to |domains| rows via one " +
       "partial-aggregated shuffle; the single-row total crosses as a literal " +
@@ -198,10 +198,10 @@ object Plans {
     ("q_kmeans_iter", "One Lloyd iteration: bounded 1-row centroid " +
       "broadcast (k-row TakeOrdered seed gather), integer-micro argmin " +
       "assignment in the scan stage, and the only DATA-SIZED shuffle is " +
-      "the (cluster, dim) partial aggregate — k x dim output rows with " +
+      "the per-cluster vec_sum_agg partial aggregate — k vector sums with " +
       "map-side combine (the round-robin repartition before assignment " +
       "spreads the local single parquet split; real scans have real " +
-      "splits); decimal sums keep the means partition-order-independent.", false))
+      "splits); exact scale-15 sums keep the means partition-order-independent.", false))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -166,7 +166,7 @@ object Scaling {
         .embedCosinePairs(embs, "vec_id", "embedding", "label", 0.3)
         .localCheckpoint()
       val t0 = System.nanoTime()
-      val nLabeled = graft.dedup.Dedup.components(pairs).count()
+      val nLabeled = graft.dedup.Dedup.componentsStars(pairs).count()
       val label = s"components_${n}x"
       println(f"$label%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  $nLabeled%9d rows  (iterative)")
     }

@@ -707,7 +707,7 @@ object SparkEntry {
         .filter(graft.functions.GraftFunctions.jaccardSorted(
           col("ga.grams"), col("gb.grams")) >= 0.8)
         .select("id_a", "id_b")
-      val comp = Dedup.components(pairs)
+      val comp = Dedup.componentsStars(pairs)
         .withColumnRenamed("id", "doc_id")
       docs.select(col("doc_id"))
         .join(comp, Seq("doc_id"), "left")
@@ -717,15 +717,9 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
     // Pairs → clusters: connected components over the embed near-dup
-    // graph (oracle = recursive CTE closure). The operator is the
-    // ALTERNATING large-star/small-star variant (r11, guide §1.2 —
-    // change the algorithm, not the constants): this cosine graph is
-    // chain-shaped at threshold 0.3, and min-label propagation tracked
-    // its diameter — 16 rounds of ~2 s scheduling/codegen fixed cost
-    // each at sf0.1, unchanged by a second pointer jump (label chains
-    // were never the bottleneck, edge hops were). Star alternations
-    // contract paths geometrically: 6 rounds, 16.6 → 5.3 s warm
-    // isolated, identical (id, min-reachable) output by construction.
+    // graph (oracle = recursive CTE closure). This cosine graph is
+    // chain-shaped at threshold 0.3; star alternations contract paths
+    // geometrically (6 rounds at sf0.1).
     "q_dedup_components" -> ((s, dir) =>
       Dedup.componentsStars(
           Dedup.embedCosinePairs(T(s, dir, "embeddings"), "vec_id", "embedding",

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Iterative graph analytics over edge DataFrames — the link-analysis
   * shape (host ranking, citation weight) a crawl-curation pipeline
   * runs beside the text filters. Complements
-  * [[graft.dedup.Dedup.components]] (min-label propagation): same
-  * per-round join-shuffle pattern, but with NUMERIC state that must
+  * [[graft.dedup.Dedup.componentsStars]] (large-star/small-star
+  * labelling): same per-round join-shuffle pattern, but with NUMERIC state that must
   * stay bit-identical across engines.
   *
   * Determinism discipline (the repo's standard): each node's incoming
@@ -62,7 +62,7 @@ object Graph {
     // iteration.
     // max with the shuffle-partition conf: defaultParallelism can be
     // tiny under dynamic allocation at job start, and coalesce never
-    // re-expands (same guard as Dedup.components)
+    // re-expands (same guard as Dedup.componentsStars)
     val par = math.max(edges.sparkSession.sparkContext.defaultParallelism,
       edges.sparkSession.sessionState.conf.numShufflePartitions)
     // Node-id representation (guide §2.3, narrower types): when BOTH

@@ -53,173 +53,57 @@ object Dedup {
       .join(known, col("fingerprint") <=> col("__known_fp"), "left_anti")
   }
 
-  /** Shared contract check for the components family: the label
-    * algebra runs on longs, and under non-ANSI SQL a silent cast of a
-    * string/uuid id would null every edge (returning garbage instead
-    * of failing). Map non-integral ids to dense longs first
-    * (xxhash64, or Curation.assignIds for collision-free ids). */
-  private def requireIntegralIds(pairs: DataFrame, op: String,
-                                 cols: String*): Unit =
-    cols.foreach { c =>
-      import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType}
-      val dt = pairs.select(col(c)).schema.head.dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
-        s"$op: id column '$c' must be an integral type, got $dt — map " +
-        "string/uuid ids to longs first (xxhash64 or Curation.assignIds)")
-    }
-
-  /** Near-dup CLUSTERS from candidate pairs: connected components by
-    * iterative min-label propagation. Every node starts labeled with its
-    * own id; each round every node takes the minimum label among itself
-    * and its neighbors, until fixpoint. One round = one shuffle join +
-    * a partial-min aggregation; lineage is truncated per round with
-    * localCheckpoint so the plan stays linear in rounds. Converges in
-    * O(component diameter) rounds — near-dup clusters are shallow.
-    * For high-diameter (chain-shaped) graphs use [[componentsStars]],
-    * the alternating large-star/small-star variant (Kiveris et al.
-    * 2014) with O(log n) rounds regardless of diameter.
-    *
-    * Returns (id, component) where component = min id reachable. */
-  def components(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-                 maxIter: Int = 50): DataFrame = {
-    // Materialize AND reset statistics, with per-round release of
-    // superseded checkpoints — see graft.ops.Mat for both the BigInt
-    // sizeInBytes-estimate trap and the pinned-blocks trap this solves.
-    import graft.ops.Mat
-    // Edge list materialized ONCE — pair generation is itself an
-    // expensive blocked similarity join. Pairs are unique (a, b), so
-    // the two directions are already distinct, and duplicate edges
-    // would not change a min anyway.
-    // Iterative state tables are capped at the cluster parallelism:
-    // the producing 2-way union inherits 2x32 shuffle partitions, and
-    // at a few thousand label rows 64 task launches per round-stage is
-    // pure scheduling overhead (zero-shuffle coalesce on materialized
-    // blocks; never coalesces below the target).
-    // floor at the session's shuffle parallelism too: on a
-    // dynamic-allocation cluster defaultParallelism reflects only the
-    // executors registered RIGHT NOW (can be tiny at job start), and a
-    // coalesce never re-expands — the conf value is the intent
-    requireIntegralIds(pairs, "components", idA, idB)
-    val par = math.max(pairs.sparkSession.sparkContext.defaultParallelism,
-      pairs.sparkSession.sessionState.conf.numShufflePartitions)
-    // Symmetrize with ONE scan of the pairs plan (inline over both
-    // directions): pair generation is itself an expensive blocked
-    // similarity join, and the union-of-two-selects form executed the
-    // whole pairs subtree twice inside this materialization job
-    // (column pruning makes the two branches non-identical subplans,
-    // so ReuseExchange does not merge them).
-    val (edges, releaseEdges) = Mat.releasable(pairs
-      .select(inline(array(
-        struct(col(idA).cast("long").as("src"), col(idB).cast("long").as("dst")),
-        struct(col(idB).cast("long").as("src"), col(idA).cast("long").as("dst"))))),
-      coalesceTo = par)
-    var (labels, releaseLabels) = Mat.releasable(
-      edges.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("component")),
-      coalesceTo = par)
-    var i = 0
-    var done = false
-    while (!done && i < maxIter) {
-      // one-hop: min label among self + neighbors (old label kept for
-      // the convergence test). LAZY persist, not a checkpoint: the
-      // only consumer is the pointer-jump self-join below, whose
-      // materialization job computes stepped once and reuses the
-      // cached blocks for the second side (column pruning makes the
-      // two sides non-identical subplans, so ReuseExchange alone would
-      // NOT dedupe them — the cache does) — one eager job per round
-      // instead of two.
-      val stepped = labels.join(
-          edges.join(labels, edges("dst") === labels("id"))
-            .groupBy("src").agg(min("component").as("nbr")),
-          labels("id") === col("src"), "left")
-        .select(labels("id"),
-          least(labels("component"), coalesce(col("nbr"), labels("component"))).as("component"),
-          labels("component").as("old"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // pointer jumping: also adopt the component's own current
-      // component — turns O(diameter) rounds into O(log diameter).
-      // A SECOND jump per round was tried in r11 and reverted: on the
-      // sf0.1 embed graph the round count stayed 16 (propagation is
-      // edge-hop-bound, not label-chain-bound) while each round paid
-      // an extra label-sized join. High-diameter graphs belong on
-      // [[componentsStars]] (measured there: 6 rounds, 3× faster).
-      val (jumped, releaseJumped) = Mat.releasable(stepped.as("a")
-        .join(stepped.select(col("id").as("cid"), col("component").as("cc")),
-          col("a.component") === col("cid"), "left")
-        .select(col("a.id").as("id"),
-          least(col("a.component"), coalesce(col("cc"), col("a.component"))).as("component"),
-          col("old")),
-        coalesceTo = par)
-      stepped.unpersist(blocking = false) // jumped is materialized
-      done = jumped.filter(col("component") < col("old")).isEmpty
-      releaseLabels() // previous round's labels are superseded
-      labels = jumped.select("id", "component")
-      releaseLabels = releaseJumped
-      i += 1
-    }
-    releaseEdges() // the returned labels are materialized, edge-free
-    if (!done) {
-      releaseLabels() // don't pin the final round's checkpoint on failure
-      throw new IllegalStateException(
-        s"components: no fixpoint after $maxIter rounds — raise maxIter")
-    }
-    labels
-  }
-
-  /** Connected components via the ALTERNATING large-star/small-star
-    * algorithm (Kiveris et al. 2014, "Connected Components in MapReduce
-    * and Beyond", §3) — the same contract as [[components]]: candidate
-    * pairs in, (id, component = min reachable id) out.
-    *
-    * Preferable on HIGH-DIAMETER graphs: each alternation roughly
-    * halves path depth geometrically, so rounds are O(log n) regardless
-    * of diameter, where plain min-label propagation tracks the diameter
-    * (pointer jumping helps [[components]] but still walks label chains,
-    * not the edge structure). Near-dup clusters are shallow, so
-    * [[components]] stays the default; this is the scale path for
-    * chain-shaped graphs (e.g. line-dedup overlap chains).
+  /** Near-dup CLUSTERS from candidate pairs: connected components via
+    * the ALTERNATING large-star/small-star algorithm (Kiveris et al.
+    * 2014, "Connected Components in MapReduce and Beyond", §3) —
+    * candidate pairs in, (id, component = min reachable id) out, one
+    * row per node appearing in `pairs`. Rounds are O(log n) regardless
+    * of diameter, and an already star-shaped graph takes zero.
     *
     * Round = large-star then small-star, each a keyed min-aggregation +
     * an equi-join on node id — never a neighbor-list collection, so a
     * high-degree hub costs a shuffle key, not executor memory. The edge
-    * set is kept DIRECTED larger→smaller and distinct; at fixpoint it
-    * is a star forest rooted at each component's minimum, from which
-    * the labels read off directly. Fixpoint detection uses an
-    * order-independent checksum (count + sum of row hashes) confirmed
-    * by an exact except() before declaring convergence. */
+    * set is kept DIRECTED larger→smaller and distinct, one checkpoint
+    * per round. Exact fixpoint test (one aggregate, also run before the
+    * first round): converged iff the edges form a star forest — no node
+    * is both a child and a parent, no child has two parents — whose
+    * roots are then the component minima, so labels read off directly. */
   def componentsStars(pairs: DataFrame, idA: String = "id_a",
                       idB: String = "id_b", maxIter: Int = 50): DataFrame = {
     import graft.ops.Mat // fresh stats + superseded-round release
-    def checksum(df: DataFrame): (Long, BigDecimal) = {
-      // decimal accumulator: a Long sum of xxhash64 overflows under ANSI
-      val r = df.agg(count(lit(1)).as("n"),
-        coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")).as("h")).head()
-      (r.getLong(0), BigDecimal(r.getDecimal(1)))
+    def isStarForest(e: DataFrame): Boolean =
+      e.select(inline(array(
+          struct(col("u").as("n"), lit(1).as("child"), lit(0).as("parent")),
+          struct(col("v").as("n"), lit(0).as("child"), lit(1).as("parent")))))
+        .groupBy("n").agg(sum("child").as("c"), max("parent").as("p"))
+        .filter(col("c") > 1 || (col("c") === 1 && col("p") === 1))
+        .isEmpty
+    // the label algebra runs on longs, and under non-ANSI SQL a silent
+    // cast of a string/uuid id would null every edge: map non-integral
+    // ids to dense longs first (xxhash64, or Curation.assignIds)
+    for (c <- Seq(idA, idB)) {
+      import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType}
+      val dt = pairs.select(col(c)).schema.head.dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
+        s"componentsStars: id column '$c' must be an integral type, got $dt — map " +
+        "string/uuid ids to longs first (xxhash64 or Curation.assignIds)")
     }
-    requireIntegralIds(pairs, "componentsStars", idA, idB)
     val a = col(idA).cast("long")
     val b = col(idB).cast("long")
     val par = math.max(pairs.sparkSession.sparkContext.defaultParallelism,
       pairs.sparkSession.sessionState.conf.numShufflePartitions)
-    // Keep the NODE set aside before dropping self-loops: a node whose
-    // only pair is (x, x) has no directed edge, but the [[components]]
-    // contract (one labeled row per node appearing in `pairs`) still
-    // owes it a (x, x) output row — the star read-off alone would
-    // silently drop it from the labeled set.
+    // the deduplicated pair list is the one eager input: pair
+    // generation is itself an expensive blocked similarity join. It
+    // stays live — the node set (self-loop-only nodes included: a node
+    // whose only pair is (x, x) has no edge but is owed an (x, x) row)
+    // and the round-0 edges derive from it lazily.
     val (all0, releaseAll0) = Mat.releasable(pairs
       .select(greatest(a, b).as("u"), least(a, b).as("v")).distinct(),
       coalesceTo = par)
-    val (nodes, releaseNodes) = Mat.releasable(
-      all0.select(col("u").as("id"))
-        .unionByName(all0.select(col("v").as("id"))).distinct(),
-      coalesceTo = par)
-    var (edges, releaseEdges) = Mat.releasable(
-      all0.filter(col("u") =!= col("v")), coalesceTo = par)
-    releaseAll0()
-    var sig = checksum(edges)
+    var edges = all0.filter(col("u") =!= col("v"))
+    var releaseEdges: () => Unit = () => ()
+    var done = isStarForest(edges)
     var i = 0
-    var done = false
     while (!done && i < maxIter) {
       // large-star: for every node u (symmetric view), connect each
       // strictly larger neighbor v to m = min(Γ(u) ∪ {u}). Result stays
@@ -240,26 +124,21 @@ object Dedup {
         .select(col("n").as("u"), col("m").as("v"))
         .distinct()
       val (next, releaseNext) = Mat.releasable(small, coalesceTo = par)
-      val nextSig = checksum(next)
-      // checksum match → confirm exactly (counts equal + distinct sets,
-      // so one except() direction decides set equality)
-      done = nextSig == sig && next.exceptAll(edges).isEmpty
       releaseEdges() // superseded; the RETURNED final edges stay live
       edges = next
-      sig = nextSig
       releaseEdges = releaseNext
+      done = isStarForest(edges)
       i += 1
     }
     if (!done) {
-      releaseNodes(); releaseEdges() // don't pin checkpoints on failure
+      releaseAll0(); releaseEdges() // don't pin checkpoints on failure
       throw new IllegalStateException(
         s"componentsStars: no fixpoint after $maxIter rounds — raise maxIter")
     }
-    val stars = edges.select(col("u").as("id"), col("v").as("component"))
-      .unionByName(edges.select(col("v").as("id"), col("v").as("component")))
-      .distinct()
-    // self-loop-only nodes have no star edge → labeled with themselves
-    nodes.join(stars, Seq("id"), "left")
+    // in a star forest a child's one parent is its label; roots and
+    // self-loop-only nodes label themselves
+    all0.select(explode(array(col("u"), col("v"))).as("id")).distinct()
+      .join(edges.select(col("u").as("id"), col("v").as("component")), Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
   }
 

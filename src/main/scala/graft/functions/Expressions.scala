@@ -503,12 +503,16 @@ object MankuImpl {
     * (blocks − maxHamming)-subset of equal blocks, in
     * `(0 until blocks).combinations(blocks - maxHamming)` order — THE
     * definition all renderers share (the operator's requires validate
-    * against it, the kernels evaluate it). Cached per config; the
-    * per-row entry points below pay one int-keyed map probe. */
+    * against it, the kernels evaluate it). Cached per (blocks,
+    * maxHamming); the per-row entry points below pay one map probe.
+    * The require guards the SQL-exposed kernels: blocks = 0 divides by
+    * zero, and other bad configs give masks under which all pairs agree. */
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[Integer, Array[Long]]()
+    new java.util.concurrent.ConcurrentHashMap[(Int, Int), Array[Long]]()
   def combos(blocks: Int, maxHamming: Int): Array[Long] =
-    cache.computeIfAbsent(blocks << 8 | maxHamming, _ => {
+    cache.computeIfAbsent((blocks, maxHamming), _ => {
+      require(blocks >= 1 && 64 % blocks == 0 && maxHamming >= 1 && maxHamming < blocks, "simhash " +
+        s"Manku tables: blocks ($blocks) must divide 64, maxHamming ($maxHamming) lie in 1 until blocks")
       val w = 64 / blocks
       val blockMask = if (w == 64) -1L else (1L << w) - 1L
       (0 until blocks).combinations(blocks - maxHamming)
@@ -839,56 +843,45 @@ object DsirScore {
 
 object BigramCountsImpl {
   /** Distinct character bigrams of the input with their occurrence
-    * counts — the compressed form of `explode(all bigram instances)`:
-    * per-document row count drops from len-1 to |distinct bigrams|
-    * (bounded by alphabet², typically ~3x fewer on prose), and any
-    * per-instance DECIMAL cost downstream multiplies by the count
-    * exactly instead of being paid per instance.
+    * counts, keyed by the code-point pair as one long: `cp1 << 21 |
+    * cp2` (a code point fits in 21 bits, so keys never collide; the
+    * context is `key >>> 21`, the second character `key & 0x1FFFFF`).
+    * Per-document rows drop from len−1 instances to |distinct bigrams|,
+    * and the model and scoring folds (dsir_model_agg, dsir_score) work
+    * on long keys with no string per bigram.
     *
     * Bigrams are consecutive CODE-POINT pairs, matching Spark's
     * `substr(t, i, 2)` (UTF8String counts code points, not UTF-16
-    * units), so `explode(bigram_counts(t))` is value-equivalent to the
-    * declarative explode of substr windows. Caller lowercases first —
-    * case mapping is left to Catalyst's `lower` so engine semantics
-    * stay pinned there. Map iteration order is unspecified (hash
-    * order); consumers aggregate, so order never reaches a result. */
+    * units). Caller lowercases first — case mapping is left to
+    * Catalyst's `lower` so engine semantics stay pinned there. Keys come
+    * out sorted (one primitive sort + run-length pass, no boxing). */
   def compute(text: UTF8String): MapData = {
-    val s = text.toString
-    val n = s.length
-    // code-point start offsets (UTF-16 indices)
-    val counts = new java.util.HashMap[String, Long]()
-    var i = 0          // start of previous code point
-    var j = 0          // start of current code point
-    if (n > 0) j = i + Character.charCount(s.codePointAt(0))
-    while (j < n) {
-      val next = j + Character.charCount(s.codePointAt(j))
-      val g = s.substring(i, next) // two code points
-      counts.merge(g, 1L, (a, b) => a + b)
-      i = j
-      j = next
+    val cps = text.toString.codePoints().toArray
+    val ks = new Array[Long](math.max(cps.length - 1, 0))
+    var i = 0
+    while (i < ks.length) { ks(i) = (cps(i).toLong << 21) | cps(i + 1); i += 1 }
+    java.util.Arrays.sort(ks)
+    val cs = new Array[Long](ks.length)
+    var m = 0
+    i = 0
+    while (i < ks.length) {
+      if (m > 0 && ks(m - 1) == ks(i)) cs(m - 1) += 1
+      else { ks(m) = ks(i); cs(m) = 1; m += 1 }
+      i += 1
     }
-    val m = counts.size
-    val keys = new Array[Any](m)
-    val vals = new Array[Any](m)
-    val it = counts.entrySet().iterator()
-    var w = 0
-    while (it.hasNext) {
-      val e = it.next()
-      keys(w) = UTF8String.fromString(e.getKey)
-      vals(w) = e.getValue
-      w += 1
-    }
-    ArrayBasedMapData(keys, vals)
+    new ArrayBasedMapData(
+      UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(ks, m)),
+      UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(cs, m)))
   }
 }
 
-/** bigram_counts(text) → map<string, bigint> of distinct code-point
-  * bigrams to occurrence counts. */
+/** bigram_counts(text) → map<bigint, bigint> of distinct code-point
+  * bigram keys (see BigramCountsImpl) to occurrence counts. */
 case class BigramCounts(child: Expression) extends UnaryExpression
     with ImplicitCastInputTypes {
   override def inputTypes = Seq(StringType)
   override def dataType: DataType =
-    MapType(StringType, LongType, valueContainsNull = false)
+    MapType(LongType, LongType, valueContainsNull = false)
   override def prettyName: String = "bigram_counts"
   override protected def nullSafeEval(input: Any): Any =
     BigramCountsImpl.compute(input.asInstanceOf[UTF8String])
@@ -2125,6 +2118,142 @@ case class BloomAgg(child: Expression, numBits: Int, numHashes: Int,
   }
 }
 
+/** Per-dimension partial state of [[VecSumAgg]]: for each dimension d,
+  * `n(d)` counts the vectors long enough to reach d, `nn(d)` the
+  * non-null elements among them, and their exact scale-15 sum is the
+  * unscaled long `s(d)` plus `big(d)`, a BigInteger spill that exists
+  * only once a long add would overflow. */
+final class VecSumBuf {
+  import org.apache.spark.sql.types.Decimal
+  var n, nn, s = new Array[Long](0)
+  var big: Array[java.math.BigInteger] = null
+
+  def grow(d: Int): Unit = if (d > n.length) {
+    n = java.util.Arrays.copyOf(n, d); nn = java.util.Arrays.copyOf(nn, d); s = java.util.Arrays.copyOf(s, d)
+    if (big != null) big = java.util.Arrays.copyOf(big, d)
+  }
+
+  def add(d: Int, u: java.math.BigInteger): Unit =
+    try s(d) = Math.addExact(s(d), u.longValueExact())
+    catch { case _: ArithmeticException =>
+      if (big == null) big = new Array[java.math.BigInteger](n.length)
+      big(d) = if (big(d) == null) u else big(d).add(u)
+    }
+
+  /** Adds one element rounded exactly as Spark casts a double to
+    * decimal(30,15): the decimal digits of Double.toString(x), rounded
+    * HALF_UP to scale 15. Non-finite and out-of-range elements fail
+    * loud, where that cast would null them (or raise under ANSI). */
+  def addElement(d: Int, x: Double): Unit = {
+    val v = if (x.isNaN || x.isInfinite) null
+      else java.math.BigDecimal.valueOf(x).setScale(15, java.math.RoundingMode.HALF_UP)
+    if (v == null || v.precision > 30) throw new ArithmeticException(
+      s"vec_sum_agg: element $x is not a finite number in the decimal(30,15) range")
+    add(d, v.unscaledValue())
+  }
+
+  def total(d: Int): java.math.BigInteger = {
+    val l = java.math.BigInteger.valueOf(s(d))
+    if (big == null || big(d) == null) l else big(d).add(l)
+  }
+
+  /** Dimension d's exact sum as decimal(38,15), failing loud past that
+    * range as the decimal sum it replaces does under ANSI. */
+  def sum(d: Int): Decimal = {
+    val v = Decimal(new java.math.BigDecimal(total(d), 15))
+    if (!v.changePrecision(38, 15)) throw new ArithmeticException(
+      s"vec_sum_agg: the sum of dimension $d overflows decimal(38,15)")
+    v
+  }
+}
+
+/** vec_sum_agg(vec) → array<struct<n:bigint, s:decimal(38,15)>>, one
+  * element per dimension of an array<double> column: the value of
+  * `posexplode(vec)` → `groupBy(pos)` → `count(1)`,
+  * `sum(cast(x as decimal(30,15)))` with no row per element and no
+  * per-row Decimal arithmetic (see [[VecSumBuf]]). Callers apply their
+  * own mean formula to (s, n), so results stay bit-identical to that
+  * decimal form. Callers cast float embeddings in a codegen'd
+  * projection first. */
+case class VecSumAgg(child: Expression,
+    override val mutableAggBufferOffset: Int = 0,
+    override val inputAggBufferOffset: Int = 0)
+  extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[VecSumBuf]
+  with ImplicitCastInputTypes {
+
+  override def children: Seq[Expression] = child :: Nil
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): VecSumAgg = copy(child = newChildren.head)
+  override def inputTypes = Seq(ArrayType(DoubleType))
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("n", LongType, nullable = false),
+    StructField("s", DecimalType(38, 15), nullable = true))), containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "vec_sum_agg"
+  override def withNewMutableAggBufferOffset(newOffset: Int): VecSumAgg =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): VecSumAgg =
+    copy(inputAggBufferOffset = newOffset)
+
+  override def createAggregationBuffer(): VecSumBuf = new VecSumBuf
+
+  override def update(buf: VecSumBuf, input: InternalRow): VecSumBuf = {
+    val v = child.eval(input)
+    if (v != null) {
+      val a = v.asInstanceOf[ArrayData]
+      buf.grow(a.numElements())
+      var d = 0
+      while (d < a.numElements()) {
+        buf.n(d) += 1
+        if (!a.isNullAt(d)) {
+          buf.nn(d) += 1
+          buf.addElement(d, a.getDouble(d))
+        }
+        d += 1
+      }
+    }
+    buf
+  }
+
+  override def merge(b1: VecSumBuf, b2: VecSumBuf): VecSumBuf = {
+    b1.grow(b2.n.length)
+    for (d <- b2.n.indices) {
+      b1.n(d) += b2.n(d); b1.nn(d) += b2.nn(d); b1.add(d, b2.total(d))
+    }
+    b1
+  }
+
+  override def eval(buf: VecSumBuf): Any = new GenericArrayData(Array.tabulate[Any](buf.n.length) {
+    d => InternalRow(buf.n(d), if (buf.nn(d) == 0) null else buf.sum(d))
+  })
+
+  // per dimension: n, nn, and the exact total as length-prefixed
+  // BigInteger bytes
+  override def serialize(buf: VecSumBuf): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bos)
+    out.writeInt(buf.n.length)
+    for (d <- buf.n.indices) {
+      val t = buf.total(d).toByteArray
+      out.writeLong(buf.n(d)); out.writeLong(buf.nn(d)); out.writeInt(t.length); out.write(t)
+    }
+    out.flush()
+    bos.toByteArray
+  }
+
+  override def deserialize(bytes: Array[Byte]): VecSumBuf = {
+    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
+    val buf = new VecSumBuf
+    buf.grow(in.readInt())
+    for (d <- buf.n.indices) {
+      buf.n(d) = in.readLong(); buf.nn(d) = in.readLong()
+      val t = new Array[Byte](in.readInt()); in.readFully(t)
+      buf.add(d, new java.math.BigInteger(t))
+    }
+    buf
+  }
+}
+
 /** bloom_might_contain(bloom, hash) → boolean. The probe side of the
   * runtime filter: a scan-stage codegen predicate (static-method call,
   * stays inside WholeStageCodegen), so fact rows whose key cannot be in
@@ -2266,6 +2395,8 @@ object GraftFunctions {
     ("bloom_agg", classOf[BloomAgg], (es: Seq[Expression]) => {
       nargs("bloom_agg", 3, es)
       BloomAgg(es.head, intLit("bloom_agg", es, 1), intLit("bloom_agg", es, 2)) }),
+    ("vec_sum_agg", classOf[VecSumAgg], (es: Seq[Expression]) => {
+      nargs("vec_sum_agg", 1, es); VecSumAgg(es.head) }),
     ("bloom_might_contain", classOf[BloomMightContain], (es: Seq[Expression]) => {
       nargs("bloom_might_contain", 2, es); BloomMightContain(es(0), es(1)) }),
     // Thin handles on Spark's own decimal plumbing (the pair Catalyst's
@@ -2366,6 +2497,7 @@ object GraftFunctions {
   def bloomAgg(c: Column, numBits: Int, numHashes: Int): Column =
     call_function("bloom_agg", c,
       org.apache.spark.sql.functions.lit(numBits), org.apache.spark.sql.functions.lit(numHashes))
+  def vecSumAgg(vec: Column): Column = call_function("vec_sum_agg", vec)
   def bloomMightContain(bloom: Column, hash: Column): Column =
     call_function("bloom_might_contain", bloom, hash)
   def unscaledLong(c: Column): Column = call_function("unscaled_long", c)

@@ -169,23 +169,25 @@ object Ann {
   }
 
   /** Per-cell centroids (IVF coarse quantizer): mean of each dimension
-    * via the repo's decimal-exact-sum discipline (sum(decimal(30,15)) /
-    * count, rounded) — a plain double avg() merges partition partials
-    * in nondeterministic order, and a last-ulp centroid difference can
-    * flip which cell is a query's nprobe-th closest (run-to-run
-    * instability in the PRUNED ivf path; same reason
-    * [[Kmeans.lloydIteration]] sums decimals). Tiny result
+    * via the repo's decimal-exact-sum discipline (elements rounded to
+    * decimal(30,15), summed exactly by the vec_sum_agg kernel, divided
+    * by the count, rounded) — a plain double avg() merges partition
+    * partials in nondeterministic order, and a last-ulp centroid
+    * difference can flip which cell is a query's nprobe-th closest
+    * (run-to-run instability in the PRUNED ivf path). A round-robin
+    * exchange spreads the (possibly single) scan split. Tiny result
     * (cells × dim) — always broadcastable. */
-  def centroids(corpus: DataFrame, cellCol: String, vecCol: String): DataFrame =
-    corpus.select(col(cellCol).as("cell"),
-        posexplode(asDouble(col(vecCol))).as(Seq("dim", "x")))
-      .groupBy("cell", "dim").agg(
-        graft.functions.Det.round(
-          (sum(col("x").cast("decimal(30,15)")) / count(lit(1))).cast("double"),
-          6).as("x"))
+  def centroids(corpus: DataFrame, cellCol: String, vecCol: String): DataFrame = {
+    graft.functions.GraftFunctions.ensureRegistered(corpus.sparkSession)
+    corpus.select(col(cellCol).as("cell"), col(vecCol).cast("array<double>").as("__v"))
+      .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
       .groupBy("cell")
-      .agg(array_sort(collect_list(struct(col("dim"), col("x"))))
-        .getField("x").as("centroid"))
+      .agg(graft.functions.GraftFunctions.vecSumAgg(col("__v")).as("__vs"))
+      .select(col("cell"), transform(col("__vs"), e => graft.functions.Det.round(
+        (e.getField("s") / e.getField("n")).cast("double"), 6)).as("centroid"))
+      // a cell whose vectors are all empty has no dimension to average
+      .filter(size(col("centroid")) > 0)
+  }
 
   /** IVF-style probe search: route each query to its `nprobe` nearest
     * centroids (broadcast join against the tiny centroid table), then

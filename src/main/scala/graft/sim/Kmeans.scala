@@ -16,11 +16,12 @@ import org.apache.spark.sql.functions._
   *    integer-exact across engines; ties → lowest centroid index) —
   *    pure scan-stage expression, no shuffle;
   *  - update: per-(cluster, dimension) mean via DECIMAL-EXACT sums
-  *    (partition-order-independent) divided as a double through the
-  *    repo's one rounding formula.
+  *    (partition-order-independent; the vec_sum_agg kernel sums each
+  *    cluster's vectors over unscaled scale-15 longs) divided as a
+  *    double through the repo's one rounding formula.
   *
-  * Scale shape: the only DATA-SIZED shuffle is the (cluster, dim)
-  * partial aggregate — k×dim output rows with map-side combine (the
+  * Scale shape: the only DATA-SIZED shuffle is the per-cluster
+  * partial aggregate — k vector sums with map-side combine (the
   * round-robin `repartition` before assignment spreads the local
   * single parquet split and disappears at scale where the scan has
   * real splits; the seed selection is a bounded k-row TakeOrdered
@@ -40,6 +41,7 @@ object Kmeans {
   def lloydIteration(corpus: DataFrame, idCol: String, vecCol: String,
                      k: Int, dim: Int): DataFrame = {
     require(k >= 2, s"kmeans: need k >= 2, got $k")
+    graft.functions.GraftFunctions.ensureRegistered(corpus.sparkSession)
     val parts = corpus.sparkSession.sparkContext.defaultParallelism
     // same deterministic seed discipline as the PQ codebook — shared
     // code so the trainer and the quantizer can never diverge
@@ -53,11 +55,11 @@ object Kmeans {
       .select(col(idCol), col("__v"),
         Pq.nearestCode(col("__v"), col("cb"), lit(0), dim).as("cluster"))
     assigned
-      .select(col("cluster"), posexplode(col("__v")).as(Seq("pos", "x")))
-      .groupBy(col("cluster"), (col("pos") + 1).cast("long").as("dim"))
-      .agg(count(lit(1)).cast("long").as("n"),
-        sum(col("x").cast("decimal(30,15)")).as("__s"))
-      .select(col("cluster"), col("dim"), col("n"),
-        graft.functions.Det.round(col("__s").cast("double") / col("n"), 6).as("mean"))
+      .groupBy(col("cluster"))
+      .agg(graft.functions.GraftFunctions.vecSumAgg(col("__v")).as("__vs"))
+      .select(col("cluster"), posexplode(col("__vs")).as(Seq("pos", "__e")))
+      .select(col("cluster"), (col("pos") + 1).cast("long").as("dim"),
+        col("__e.n").as("n"),
+        graft.functions.Det.round(col("__e.s").cast("double") / col("__e.n"), 6).as("mean"))
   }
 }

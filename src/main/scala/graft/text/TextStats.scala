@@ -136,54 +136,45 @@ object TextStats {
     * perplexity-filter signal of CCNet (Wenzek et al. 2020) with the
     * n-gram model trained in-engine instead of imported.
     *
-    * Determinism: each bigram's -ln P is truncated to decimal(30,15)
+    * Determinism: each bigram's -ln P is rounded to decimal(20,15)
     * before the per-doc sum, so accumulation is exact and
     * partition-order-independent — the DuckDB oracle reproduces it
     * bit-for-bit (the repo's standard decimal-exact-sum discipline).
     *
-    * Scale shape: one exploded-bigram aggregate trains the model (keyed
-    * shuffle, map-side combine); the model table is bounded by the
-    * CHARACTER alphabet squared — a true fixed-size dim that AQE
-    * broadcasts — so scoring is a scan-stage join plus one per-doc
-    * aggregation. Docs shorter than one bigram drop (mirrored by the
-    * oracle). Returns (id, n_bigrams, nats). */
+    * Engine: the one [[graft.text.Curation.dsirWeights]] runs. Each
+    * document folds to a bigram_counts map keyed `cp1 << 21 | cp2`; one
+    * dsir_model_agg job trains the alphabet²-bounded model onto the
+    * driver (context = key >>> 21, vocabulary = distinct key & 0x1FFFFF),
+    * Spark casts each distinct bigram's `-ln P` on a local frame, and
+    * scoring is the dsir_score fold over unscaled scale-15 longs: no
+    * explode, no join, no per-row decimal, no pinned checkpoint.
+    * EAGER: constructing the result runs the training job. Docs
+    * shorter than one bigram drop (mirrored by the oracle); duplicate
+    * ids pool into one score. Returns (id, n_bigrams, nats). */
   def lmScore(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // COUNTED bigrams via the bigram_counts codegen kernel: one row per
-    // DISTINCT bigram per doc (count attached) instead of one row per
-    // instance — ~3x fewer rows on prose, and the per-instance decimal
-    // cast below becomes one exact decimal×count multiply. The explode
-    // of substr windows this replaces was also evaluated once per
-    // consumer subtree (scoring + the model's partial agg; exchange
-    // reuse covers ctx/vocab), doubling the dominant cost.
-    val grams = docs
+    import graft.functions.GraftFunctions.{bigramCounts, dsirModelAgg, dsirScore}
+    val spark = docs.sparkSession
+    graft.functions.GraftFunctions.ensureRegistered(spark)
+    val counts = docs
       .select(col(idCol), lower(col(textCol)).as("t"))
       .filter(length(col("t")) >= 2)
-      // round-robin exchange: spreads the per-row kernel work off the
-      // (possibly single) parquet split before the heavy projection
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol),
-        explode(graft.functions.GraftFunctions.bigramCounts(col("t"))))
-      .select(col(idCol), col("key").as("g"), col("value").as("k"))
-    val model = grams.groupBy("g").agg(sum(col("k")).cast("double").as("c"))
-    val ctx = model.groupBy(substring(col("g"), 1, 1).as("a"))
-      .agg(sum(col("c")).as("ca"))
-    val vocab = model.agg(
-      count_distinct(substring(col("g"), 2, 1)).cast("double").as("nv"))
-    grams
-      .join(model, "g")
-      .join(ctx, substring(col("g"), 1, 1) === col("a"))
-      .crossJoin(broadcast(vocab))
-      // Per-INSTANCE nll truncated to scale 15 exactly as before, then
-      // weighted by the instance count: decimal(20,15) × decimal(10,0)
-      // → decimal(31,15), exact (nll < 1e5 and k < 1e10 by construction,
-      // so neither cast can overflow; the old decimal(30,15) cast and
-      // this one agree — double→decimal rounds at scale 15 either way).
-      .select(col(idCol), col("k"),
-        (-log((col("c") + 1) / (col("ca") + col("nv"))))
-          .cast("decimal(20,15)").as("nll"))
+      .repartition(spark.sparkContext.defaultParallelism)
+      .select(col(idCol), bigramCounts(col("t")).as("__bc"))
+    val model = counts.select(dsirModelAgg(col("__bc"), lit(true)))
+      .head().getMap[Long, scala.collection.Seq[Long]](0)
+      .iterator.map { case (g, cc) => (g, cc.head) }.toSeq
+    val ctx = model.groupMapReduce(_._1 >>> 21)(_._2)(_ + _)
+    val nv = model.iterator.map(_._1 & 0x1FFFFFL).toSet.size.toDouble
+    import spark.implicits._
+    val nll: Map[Long, String] = model.map { case (g, c) => (g, c, ctx(g >>> 21)) }
+      .toDF("g", "c", "ca")
+      .select(col("g"), (-log((col("c").cast("double") + 1) /
+          (col("ca").cast("double") + lit(nv)))).cast("decimal(20,15)").cast("string"))
+      .collect().iterator.map(r => r.getLong(0) -> r.getString(1)).toMap
+    counts
+      .select(col(idCol), dsirScore(col("__bc"), typedLit(nll)).as("__sc"))
       .groupBy(col(idCol))
-      .agg(sum(col("k")).as("n_bigrams"),
-        sum(col("nll") * col("k").cast("decimal(10,0)")).as("__s"))
+      .agg(sum(col("__sc.n_feats")).as("n_bigrams"), sum(col("__sc.s")).as("__s"))
       // exact decimal sum → round(6) → IDENTICAL double on both engines,
       // then one double division + round(4): no decimal-division scale
       // rules in play (they differ between engines)

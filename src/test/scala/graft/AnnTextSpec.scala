@@ -297,4 +297,129 @@ class AnnTextSpec extends SparkSpec {
       .orderBy("doc_id").as[(Long, Long, Double)].collect().toSeq
     assert(again == got)
   }
+
+  // ---- exact long-sum kernels: equal to the declarative forms they replaced
+
+  /** The pre-kernel lmScore: one row per bigram INSTANCE (substr
+    * windows), model/context/vocab aggregates joined back, and the
+    * per-instance nll cast to decimal(20,15) before the per-doc sum. */
+  private def lmScoreDecl(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val grams = docs.select(col("doc_id"), lower(col("text")).as("t"))
+      .filter(length(col("t")) >= 2)
+      .select(col("doc_id"), explode(transform(sequence(lit(1), length(col("t")) - 1),
+        i => col("t").substr(i, lit(2)))).as("g"))
+    val model = grams.groupBy("g").agg(count(lit(1)).cast("double").as("c"))
+    val ctx = model.groupBy(substring(col("g"), 1, 1).as("a")).agg(sum(col("c")).as("ca"))
+    val vocab = model.agg(count_distinct(substring(col("g"), 2, 1)).cast("double").as("nv"))
+    grams.join(model, "g")
+      .join(ctx, substring(col("g"), 1, 1) === col("a"))
+      .crossJoin(vocab)
+      .select(col("doc_id"),
+        (-log((col("c") + 1) / (col("ca") + col("nv")))).cast("decimal(20,15)").as("nll"))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_bigrams"), sum(col("nll")).as("__s"))
+      .select(col("doc_id"), col("n_bigrams"),
+        graft.functions.Det.round4(round(col("__s"), 6).cast("double") / col("n_bigrams")).as("nats"))
+  }
+
+  test("lmScore equals its declarative form on non-ASCII, 1-char and 2-char docs") {
+    val docs = Seq(
+      (1L, "the quick brown fox"), (2L, "Día año, ÑANDÚ über straße"),
+      (3L, "日本語のテキスト日本"), (4L, "a😀b😀 emoji 😀😀"), (5L, "x"), (6L, "xy"),
+      (7L, "Ω"), (8L, "ωΩ"), (9L, null), (10L, ""), (2L, "día again"), (11L, "  "))
+      .toDF("doc_id", "text")
+    val want = lmScoreDecl(docs).as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
+    val got = TextStats.lmScore(docs, "doc_id", "text")
+      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
+    assert(got == want)
+    // sub-bigram docs (1 char, empty, NULL) drop; id 2 pools both rows
+    assert(got.map(_._1) == Seq(1L, 2L, 3L, 4L, 6L, 8L, 11L))
+  }
+
+  private val vecRows: Seq[(Int, Array[java.lang.Double])] = {
+    val rnd = new scala.util.Random(11)
+    def v(xs: Double*): Array[java.lang.Double] = xs.map(java.lang.Double.valueOf).toArray
+    Seq.tabulate(24)(i => (i % 3, v(Seq.fill(4)(rnd.nextGaussian() * 10): _*))) ++
+      Seq((0, v(-1e3, 1e3, 1e-17, -3e-16)), (1, v(999.9999999999999, -1e3, 5e-16, 0.0)),
+        (3, v(0.1, 0.2, 0.3)),                                   // single-row cell
+        (4, Array[java.lang.Double](null, 1.5, null)),           // null elements
+        (4, v(2.5, 2.5, 1e-15)), (4, v(7.0)),                    // ragged
+        (8, Array[java.lang.Double](null, 2.0)),                 // an all-NULL dimension
+        (5, v()), (5, null), (6, null)) ++                       // empty cells
+      Seq.fill(12)((7, v(999.0, -999.0, 999.0))) ++              // sums past the long range
+      Seq.fill(40)((9, v(Seq.fill(5)(                            // magnitudes 1e-20 .. 1e9
+        (rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(30) - 20)): _*)))
+  }
+
+  /** The declarative twin: one row per element, decimal(30,15) sums. */
+  private def vecSumDecl(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("g"), posexplode(transform(col("v"), x => x.cast("double"))).as(Seq("pos", "x")))
+      .groupBy("g", "pos")
+      .agg(count(lit(1)).as("n"), sum(col("x").cast("decimal(30,15)")).as("s"))
+      .as[(Int, Int, Long, java.math.BigDecimal)].collect().sortBy(r => (r._1, r._2)).toSeq
+
+  private def vecSumKernel(df: org.apache.spark.sql.DataFrame) =
+    df.repartition(3).groupBy("g")
+      .agg(graft.functions.GraftFunctions.vecSumAgg(col("v")).as("vs"))
+      .select(col("g"), posexplode(col("vs")).as(Seq("pos", "e")))
+      .select(col("g"), col("pos"), col("e.n"), col("e.s"))
+      .as[(Int, Int, Long, java.math.BigDecimal)].collect().sortBy(r => (r._1, r._2)).toSeq
+
+  test("vec_sum_agg equals the posexplode decimal(30,15) sums, in both codegen modes") {
+    val dbl = vecRows.toDF("g", "v")
+    val flt = dbl.select(col("g"), col("v").cast("array<float>").as("v"))
+    for (df <- Seq(dbl, flt)) {
+      val want = vecSumDecl(df)
+      assert(want.exists(_._4 == null) && want.exists(r => r._4 != null &&
+        r._4.abs.compareTo(java.math.BigDecimal.valueOf(9223)) > 0)) // null and >long sums covered
+      for ((mode, wholeStage) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false")) {
+        spark.conf.set("spark.sql.codegen.factoryMode", mode)
+        spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+        try assert(vecSumKernel(df) == want, s"mode $mode")
+        finally {
+          spark.conf.unset("spark.sql.codegen.factoryMode")
+          spark.conf.unset("spark.sql.codegen.wholeStage")
+        }
+      }
+    }
+    // no rows at all: one empty sum, not a NULL
+    val none = dbl.filter(lit(false)).agg(graft.functions.GraftFunctions.vecSumAgg(col("v")))
+      .head().getSeq[Any](0)
+    assert(none.isEmpty)
+  }
+
+  test("centroids equal their declarative decimal form") {
+    val df = vecRows.toDF("cell", "v")
+    val want = df.select(col("cell"), posexplode(transform(col("v"), x => x.cast("double")))
+        .as(Seq("dim", "x")))
+      .groupBy("cell", "dim").agg(graft.functions.Det.round(
+        (sum(col("x").cast("decimal(30,15)")) / count(lit(1))).cast("double"), 6).as("x"))
+      .groupBy("cell")
+      .agg(array_sort(collect_list(struct(col("dim"), col("x")))).getField("x").as("centroid"))
+      .as[(Int, Seq[java.lang.Double])].collect().sortBy(_._1).toSeq
+    val got = Ann.centroids(df, "cell", "v")
+      .as[(Int, Seq[java.lang.Double])].collect().sortBy(_._1).toSeq
+    assert(got == want)
+    assert(!got.exists(r => r._1 == 5 || r._1 == 6)) // empty-only cells have no centroid
+  }
+
+  test("vec_sum_agg fails loud on out-of-range elements and on decimal(38,15) overflow") {
+    val bad = Seq((0, Array(1.0, 1e15))).toDF("g", "v")
+    val e = intercept[Exception](vecSumKernel(bad))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("vec_sum_agg")), e.toString)
+    // a sum past decimal(38,15) (|s| >= 1e23) takes ~1e8 rows of the
+    // largest element; doubling one buffer through merge reaches it
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeArrayData}
+    val agg = graft.functions.VecSumAgg(BoundReference(0,
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType, false), false))
+    var buf = agg.update(agg.createAggregationBuffer(),
+      InternalRow(UnsafeArrayData.fromPrimitiveArray(Array(9.99e14))))
+    for (_ <- 1 to 26) buf = agg.merge(buf, agg.deserialize(agg.serialize(buf)))
+    agg.eval(buf) // 9.99e14 * 2^26 < 1e23: still representable
+    buf = agg.merge(buf, agg.deserialize(agg.serialize(buf)))
+    val o = intercept[ArithmeticException](agg.eval(buf))
+    assert(o.getMessage.contains("vec_sum_agg") && o.getMessage.contains("overflows"), o.getMessage)
+  }
 }

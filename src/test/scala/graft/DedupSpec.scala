@@ -156,20 +156,40 @@ class DedupSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("components: min-label propagation finds transitive clusters") {
-    // two clusters: a 5-node chain (needs several propagation rounds)
-    // and a pair; plus the chain joined out of order
-    val pairs = Seq((2L, 3L), (4L, 5L), (1L, 2L), (3L, 4L), (10L, 11L))
-      .toDF("id_a", "id_b")
-    val got = Dedup.components(pairs).as[(Long, Long)].collect().toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
-      10L -> 10L, 11L -> 10L))
+  /** Test-local reference for componentsStars: driver union-find over
+    * the same pairs, labelling every node with its component's minimum
+    * id (one row per node appearing in `pairs`, self-pairs included). */
+  private def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
   }
 
-  test("componentsStars agrees with components on a mixed random graph") {
+  private def stars(pairs: Seq[(Long, Long)], maxIter: Int = 50): Map[Long, Long] =
+    Dedup.componentsStars(pairs.toDF("id_a", "id_b"), maxIter = maxIter)
+      .as[(Long, Long)].collect().toMap
+
+  test("componentsStars finds transitive clusters") {
+    // two clusters: a 5-node chain (needs several rounds) and a pair;
+    // plus the chain joined out of order
+    val pairs = Seq((2L, 3L), (4L, 5L), (1L, 2L), (3L, 4L), (10L, 11L))
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
+      10L -> 10L, 11L -> 10L)
+    assert(unionFind(pairs) == want)
+    assert(stars(pairs) == want)
+  }
+
+  test("componentsStars agrees with a union-find oracle on a mixed random graph") {
     val rnd = new scala.util.Random(42)
     // several clusters of mixed shape: chains, a hub, random extra edges
-    val pairs = (
+    val pairs =
       (0 until 20).map(i => (i.toLong, (i + 1).toLong)) ++           // chain 0..20
       (30 until 40).map(i => (30L, i.toLong + 1)) ++                 // star at 30
       (0 until 15).map { _ =>                                        // random intra-50..70
@@ -177,25 +197,53 @@ class DedupSpec extends SparkSpec {
         val y = 50 + (x - 50 + 1 + rnd.nextInt(19)) % 20 // never x itself
         (x.toLong, y.toLong) } ++
       Seq((100L, 101L))
-    ).toDF("id_a", "id_b")
-    val expect = Dedup.components(pairs).as[(Long, Long)].collect().toMap
-    val got = Dedup.componentsStars(pairs).as[(Long, Long)].collect().toMap
-    assert(got == expect, s"stars=$got minlabel=$expect")
+    val expect = unionFind(pairs)
+    val got = stars(pairs)
+    assert(got == expect, s"stars=$got unionFind=$expect")
   }
 
-  test("components twins: self-pair singletons labeled, string ids rejected loud") {
+  test("componentsStars: self-pair singletons labeled, string ids rejected loud") {
     // a node whose ONLY pair is (x, x) still owes a labeled row — the
     // star read-off alone would drop it (r6 review finding)
-    val pairs = Seq((1L, 2L), (5L, 5L), (2L, 1L)).toDF("id_a", "id_b")
+    val pairs = Seq((1L, 2L), (5L, 5L), (2L, 1L))
     val expect = Map(1L -> 1L, 2L -> 1L, 5L -> 5L)
-    assert(Dedup.components(pairs).as[(Long, Long)].collect().toMap == expect)
-    assert(Dedup.componentsStars(pairs).as[(Long, Long)].collect().toMap == expect)
+    assert(unionFind(pairs) == expect)
+    assert(stars(pairs) == expect)
     // non-integral ids: a silent long cast would null every edge and
     // return garbage under non-ANSI SQL — must fail at construction
     val uuidPairs = Seq(("a-1", "b-2")).toDF("id_a", "id_b")
-    val e1 = intercept[IllegalArgumentException](Dedup.components(uuidPairs))
-    val e2 = intercept[IllegalArgumentException](Dedup.componentsStars(uuidPairs))
-    assert(e1.getMessage.contains("integral") && e2.getMessage.contains("integral"))
+    val e = intercept[IllegalArgumentException](Dedup.componentsStars(uuidPairs))
+    assert(e.getMessage.contains("integral"))
+  }
+
+  test("componentsStars: star-shaped input takes zero rounds; non-star input does not") {
+    // already a star forest (every root is its component's minimum):
+    // the fixpoint test holds before the first round, so maxIter = 0
+    // succeeds — hub, two-node clusters, a reversed and a duplicated
+    // pair, and a self-loop-only node
+    val star = Seq((1L, 2L), (3L, 1L), (1L, 4L), (4L, 1L), (1L, 4L),
+      (10L, 11L), (20L, 20L), (30L, 31L), (32L, 30L))
+    assert(stars(star, maxIter = 0) == unionFind(star))
+    // a path is not a star forest (2 is both a child and a parent), nor
+    // is a node with two smaller neighbours (5 → 3 and 5 → 4): both
+    // need a round, so maxIter = 0 must throw
+    for (nonStar <- Seq(Seq((1L, 2L), (2L, 3L)), Seq((3L, 5L), (4L, 5L)))) {
+      val e = intercept[IllegalStateException](stars(nonStar, maxIter = 0))
+      assert(e.getMessage.contains("no fixpoint"), e.getMessage)
+      assert(stars(nonStar) == unionFind(nonStar))
+    }
+  }
+
+  test("componentsStars matches union-find on hub, self-loop-only, duplicate and reversed pairs") {
+    val rnd = new scala.util.Random(7)
+    val hub = (1 to 30).map(i => (100L, 100L + i))                  // hub at its minimum
+    val offHub = (1 to 10).map(i => (200L + i, 205L))               // hub in the middle
+    val loops = Seq((300L, 300L), (301L, 301L), (302L, 303L), (303L, 303L))
+    val dupRev = Seq((400L, 401L), (401L, 400L), (400L, 401L), (402L, 401L), (401L, 402L))
+    val randomPairs = (0 until 25).map(_ => (500L + rnd.nextInt(15), 500L + rnd.nextInt(15)))
+    for (pairs <- Seq(hub, offHub, loops, dupRev, randomPairs,
+                      hub ++ offHub ++ loops ++ dupRev ++ randomPairs))
+      assert(stars(pairs) == unionFind(pairs), s"pairs=$pairs")
   }
 
   test("minhashPairs rejects a non-divisible or degenerate banding") {
@@ -345,6 +393,8 @@ class DedupSpec extends SparkSpec {
     val labels = Dedup.componentsStars(pairs, maxIter = 25)
     assert(labels.filter(col("component") =!= 0L).isEmpty)
     assert(labels.count() == n + 1)
+    // the union-find oracle agrees: one component rooted at 0
+    assert(unionFind((0 until n).map(i => (i.toLong, (i + 1).toLong))).values.toSet == Set(0L))
   }
 
   test("JaccardImpl merge scan equals set-based jaccard") {

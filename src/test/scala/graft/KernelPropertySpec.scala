@@ -83,9 +83,13 @@ class KernelPropertySpec extends AnyFunSuite {
       randomText(), randomText(), randomText())
     (texts ++ (1 to Trials).map(_ => randomText())).foreach { t =>
       val m = graft.functions.BigramCountsImpl.compute(UTF8String.fromString(t))
+      // keys are cp1 << 21 | cp2: decode back to the two code points
       val got = (0 until m.numElements()).map { i =>
-        m.keyArray().getUTF8String(i).toString -> m.valueArray().getLong(i)
+        val k = m.keyArray().getLong(i)
+        new String(Array((k >>> 21).toInt, (k & 0x1FFFFF).toInt), 0, 2) ->
+          m.valueArray().getLong(i)
       }.toMap
+      assert(got.size == m.numElements(), s"distinct keys for '$t'")
       assert(got == naive(t), s"bigram counts for '$t'")
     }
   }

@@ -32,6 +32,31 @@ class MankuSpec extends SparkSpec {
         s"combos($b, $mh) diverged")
   }
 
+  test("MankuImpl.combos rejects degenerate configs by name; cache keys on the pair") {
+    // blocks = 0 divides by zero, non-divisors of 64 and maxHamming
+    // outside 1 until blocks give degenerate masks: all fail loud
+    for ((b, mh) <- Seq((0, 1), (3, 1), (128, 1), (8, 0), (8, 8), (-4, 1))) {
+      val e = intercept[IllegalArgumentException](MankuImpl.combos(b, mh))
+      assert(e.getMessage.contains("blocks") && e.getMessage.contains("maxHamming"),
+        e.getMessage)
+    }
+    // the SQL-exposed kernel inherits the check at evaluation
+    val e = intercept[Exception](Seq(1L).toDF("sim")
+      .select(GraftFunctions.simhashMankuTables(col("sim"), 0, 1)).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.isInstanceOf[IllegalArgumentException] &&
+        t.getMessage.contains("blocks")), e.toString)
+    // every valid (blocks, maxHamming) pair is its own cache entry:
+    // the old `blocks << 8 | maxHamming` key collapsed distinct pairs
+    // once maxHamming reached the blocks bits
+    val all = for (b <- Seq(1, 2, 4, 8, 16, 32, 64); mh <- 1 until b
+                   if b - mh <= 2 || mh <= 2) yield (b, mh)
+    all.foreach { case (b, mh) => MankuImpl.combos(b, mh) } // warm the cache
+    all.foreach { case (b, mh) =>
+      assert(MankuImpl.combos(b, mh).toSeq == specCombos(b, mh), s"combos($b, $mh)")
+    }
+  }
+
   test("simhash_manku_tables ≡ literal inline struct expansion") {
     val combos = specCombos(blocks, h)
     val df = sims.toDF("sim")

@@ -14,6 +14,10 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+# Heap: the Tier-1 rule (as perfbench/run.py computes it) — half of
+# physical memory, clamped to 2..8 GB.
+HEAP="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' \
+  /proc/meminfo 2>/dev/null || echo 2g)"
 SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_REPS="$REPS" SPARK_GRAFT_ONLY="$ONLY" \
-  java $OPENS -Xmx48g -Dspark.ui.enabled=false \
+  java $OPENS -Xmx$HEAP -Dspark.ui.enabled=false \
   -cp "$CP" graft.Bench
