@@ -1,12 +1,12 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line. Failed queries are reported in an "errors" map
-  * (and excluded from the total) instead of being silently timed — a
-  * broken query must be distinguishable from a slow one.
+  * prints two JSON lines: the full per-query record, then a compact
+  * total that fits a 2000-byte stdout tail. Failed queries are reported
+  * in an "errors" map (and excluded from the total) instead of being
+  * silently timed — a broken query must be distinguishable from a slow
+  * one.
   *
   * Each query runs SPARK_GRAFT_REPS times (default 3) and the PER-QUERY
   * MINIMUM is reported: this host carries external CPU contention with
@@ -15,59 +15,26 @@ import org.apache.spark.sql.SparkSession
   * warmup (JIT + codegen + parquet footer cache); since minima are
   * taken, warmup cost never leaks into the reported numbers.
   *
-  * SPARK_GRAFT_FORK=1 switches to ISOLATED-JVM mode: one child JVM per
-  * query (same classpath/JVM args, SPARK_GRAFT_ONLY pinned), merged
-  * into the same one-line JSON plus `"mode":"fork"`. In-suite numbers
-  * carry single-JVM contamination — accumulated JIT state, codegen
-  * cache pressure, GC debt from 100+ prior queries — measured at 2-5x
-  * on iterative operators (SCALING.md); fork mode trades wall clock
-  * (a full JVM+session start per query) for per-query numbers that
-  * reflect plan cost alone. Default off: the driver's contract is the
-  * in-suite run. */
+  * For isolated-JVM numbers of one query (no JIT, codegen-cache or GC
+  * debt from the rest of the suite), run `graft.Profile <sfDir> <query>
+  * [reps]`. */
 object Bench {
-  /** JSON string escape shared by both output paths (kept in one place
-    * so an escaping fix cannot diverge between suite and fork mode). */
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  }
-
   def main(args: Array[String]): Unit = {
-    if (sys.env.getOrElse("SPARK_GRAFT_FORK", "0") == "1") { runForked(); return }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = math.max(sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt, 1)
     // Optional comma-separated subset for targeted runs (regression
     // attribution, scale spot checks); empty/unset = the full suite.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim)
       .filter(_.nonEmpty).toSet).filter(_.nonEmpty)
-    // Scan splits: the bench tables are one file each, so the 128m
-    // default collapses a multi-row-group fact scan to 1-2 tasks on a
-    // 32-core host. 8m keeps scans parallel wherever the writer produced
-    // multiple row groups (a single row group is never splittable);
-    // overridable for experiments.
-    val maxPart = sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", maxPart)
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Single-rep runs keep the old untimed warmup pass (JIT + codegen +
-    // parquet footers); with reps > 1 the first rep plays that role and
-    // the minimum strips it.
+    val spark = GraftSession.harness()
     val selected = only match {
       case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
       case None => SparkEntry.queries
     }
-    if (reps == 1 && sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") == "1")
+    // Single-rep runs keep an untimed warmup pass (JIT + codegen +
+    // parquet footers); with reps > 1 the first rep plays that role and
+    // the minimum strips it.
+    if (reps == 1)
       selected.foreach { case (name, fn) =>
         try SparkEntry.withQueryConfs(spark, name) { SparkEntry.materialize(fn(spark, sfDir)) }
         catch { case _: Throwable => () }
@@ -97,9 +64,9 @@ object Bench {
       (name, if (ts.isEmpty) 0.0 else ts.min, err)
     }
     val ok = outcomes.filter(_._3.isEmpty)
-    val qs = ok.map { case (k, v, _) => "\"" + esc(k) + "\":" + f"$v%.3f" }
+    val qs = ok.map { case (k, v, _) => Json.str(k) + ":" + f"$v%.3f" }
       .mkString("{", ",", "}")
-    val errs = outcomes.collect { case (k, _, Some(e)) => "\"" + esc(k) + "\":\"" + esc(e) + "\"" }
+    val errs = outcomes.collect { case (k, _, Some(e)) => Json.str(k) + ":" + Json.str(e) }
       .mkString("{", ",", "}")
     val total = ok.map(_._2).sum
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","reps":$reps,"stat":"min","drive":"materialize"}"""
@@ -121,87 +88,7 @@ object Bench {
     // tail always contains one parseable line. Same total, same timed
     // region; the full per-query map stays on the line above and in
     // the file it was written to (queries_file).
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${ok.size},"n_errors":${outcomes.size - ok.size},"queries_file":"${esc(outFile)}","sf":"$sfDir","reps":$reps,"stat":"min","drive":"materialize"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${ok.size},"n_errors":${outcomes.size - ok.size},"queries_file":${Json.str(outFile)},"sf":"$sfDir","reps":$reps,"stat":"min","drive":"materialize"}""")
     spark.stop()
-  }
-
-  /** Isolated-JVM mode: spawn one child `graft.Bench` per query with the
-    * parent's exact JVM args + classpath (so --add-opens/-Xmx carry
-    * over), SPARK_GRAFT_ONLY pinned to that query and fork mode off;
-    * parse each child's JSON line and merge. Child stderr (Spark logs)
-    * is inherited; stdout is captured for the JSON. Sequential by
-    * design — parallel children would contend for the same 32 cores and
-    * reintroduce exactly the cross-query interference this mode
-    * removes. */
-  private def runForked(): Unit = {
-    import scala.jdk.CollectionConverters._
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val reps = math.max(sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt, 1)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim)
-      .filter(_.nonEmpty).toSet).filter(_.nonEmpty)
-    val names = (only match {
-      case Some(ns) => SparkEntry.queries.keys.filter(ns)
-      case None => SparkEntry.queries.keys
-    }).toSeq.sorted
-    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-    val jvmArgs = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments.asScala.toSeq
-    val cp = System.getProperty("java.class.path")
-    val qPair = "\"([A-Za-z0-9_]+)\":([0-9][0-9.]*)".r
-    val results = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // scale core-confs (e.g. the zstd cooccur shuffle codec) win only
-    // at the disk-bound decade and LOSE at small volumes — opt-in via
-    // SPARK_GRAFT_SCALE_CONFS=1 (measured both ways; SparkEntry scaladoc)
-    val applyScaleConfs =
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_CONFS", "0") == "1"
-    names.foreach { q =>
-      // core-conf overrides (SparkConf-level, unchangeable in a running
-      // context) apply here because each child is a fresh JVM
-      val coreConfs = (if (applyScaleConfs)
-          SparkEntry.queryCoreConfs.getOrElse(q, Map.empty)
-        else Map.empty[String, String])
-        .map { case (k, v) => s"-D$k=$v" }.toSeq
-      val pb = new ProcessBuilder(
-        (Seq(javaBin) ++ jvmArgs ++ coreConfs ++ Seq("-cp", cp, "graft.Bench")).asJava)
-      pb.environment().put("SPARK_GRAFT_ONLY", q)
-      pb.environment().put("SPARK_GRAFT_FORK", "0")
-      pb.environment().put("SPARK_GRAFT_BENCH_OUT", "/dev/null")
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      val p = pb.start()
-      val out = scala.io.Source.fromInputStream(p.getInputStream, "UTF-8").mkString
-      val rc = p.waitFor()
-      // the child also prints the compact tail-friendly summary (no
-      // "queries" map) as its last line — parse the full line only
-      val line = out.linesIterator.filter(l =>
-        l.startsWith("{\"metric\"") && l.contains("\"queries\":{")).toSeq.lastOption
-      (rc, line) match {
-        case (0, Some(l)) =>
-          val qObj = "\"queries\":\\{([^}]*)\\}".r.findFirstMatchIn(l).map(_.group(1))
-          val eObj = "\"errors\":\\{([^}]*)\\}".r.findFirstMatchIn(l).map(_.group(1))
-          qObj.toSeq.flatMap(qPair.findAllMatchIn).foreach(m =>
-            results(m.group(1)) = m.group(2).toDouble)
-          if (!results.contains(q))
-            errors(q) = eObj.filter(_.nonEmpty)
-              .map(e => s"child error: ${e.take(200)}")
-              .getOrElse("child produced no timing")
-        case _ =>
-          errors(q) = s"fork child rc=$rc"
-      }
-      System.err.println(s"[bench-fork] $q: " +
-        results.get(q).map(t => f"$t%.3f s").getOrElse(errors.getOrElse(q, "?")))
-    }
-    val qs = results.map { case (k, v) => "\"" + esc(k) + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val errs = errors.map { case (k, e) => "\"" + esc(k) + "\":\"" + esc(e) + "\"" }
-      .mkString("{", ",", "}")
-    val total = results.values.sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","reps":$reps,"stat":"min","mode":"fork","drive":"materialize"}"""
-    println(line)
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FORK.json")
-    try Files.write(Paths.get(outFile), (line + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
-    // same compact tail-friendly last line as suite mode (see main)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"queries_file":"${esc(outFile)}","sf":"$sfDir","reps":$reps,"stat":"min","mode":"fork","drive":"materialize"}""")
   }
 }

@@ -51,4 +51,24 @@ object GraftSession {
     graft.functions.GraftFunctions.ensureRegistered(s)
     s
   }
+
+  /** The one session every graft main (Bench, Verify, Profile, Plans,
+    * Scaling) and the test suite run on, so Verify checks the same
+    * plans Bench times. `cpus` sets both the local thread count and the
+    * shuffle partitions. Scan splits are 8m with a 1m open cost: the
+    * bench tables are one file each, and the 128m default would
+    * collapse a multi-row-group fact scan to 1-2 tasks. Installs the
+    * codegen-fallback guard. Every step is idempotent: a second call
+    * returns the same session with these SQL confs re-applied. */
+  def harness(cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt): SparkSession = {
+    val s = builder(s"local[$cpus]", cpus, "8m")
+      .config("spark.sql.files.openCostInBytes", "1m")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    // before re-registering: each replaced function logs a WARN
+    s.sparkContext.setLogLevel("ERROR")
+    graft.functions.GraftFunctions.ensureRegistered(s)
+    CodegenGuard.install()
+    s
+  }
 }

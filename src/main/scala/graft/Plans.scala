@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** PLANS.md generator (dev tool): prints the formatted physical plan of
@@ -205,18 +204,7 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.harness()
     println("# PLANS - formatted physical plans of the headline queries (sf0.1)")
     println()
     println("Generated by `graft.Plans` (SPARK_GRAFT_SF_DIR=... java ... graft.Plans).")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 import scala.collection.mutable.ArrayBuffer
@@ -18,26 +17,7 @@ object Profile {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val maxPart = sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m")
-    // Shuffle-width experiments (e.g. does 4x the partitions cut spill
-    // on a >page-cache shuffle?) without decoupling from the bench
-    // session shape otherwise.
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.files.maxPartitionBytes", maxPart)
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.hugeMethodLimit",
-        sys.env.getOrElse("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"))
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
 
     case class St(id: Int, nm: String, ms: Long, tasks: Int,
                   inMb: Double, shRead: Double, shWrite: Double)
@@ -81,13 +61,11 @@ object Profile {
       }
       r += 1
     }
-    if (sys.env.getOrElse("SPARK_GRAFT_EXPLAIN", "1") == "1") {
-      // `last` was driven through its own QueryExecution (materialize),
-      // so its AdaptiveSparkPlan prints the FINAL runtime plan — AQE's
-      // actual join strategies and stage reuse, not the static guess a
-      // fresh fn() would show
-      println(last.queryExecution.explainString(FormattedMode))
-    }
+    // `last` was driven through its own QueryExecution (materialize),
+    // so its AdaptiveSparkPlan prints the FINAL runtime plan — AQE's
+    // actual join strategies and stage reuse, not the static guess a
+    // fresh fn() would show
+    println(last.queryExecution.explainString(FormattedMode))
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling harness (dev tool, like Bench/Verify): times the dedup pair
@@ -15,19 +15,8 @@ import org.apache.spark.sql.functions._
 object Scaling {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force the 100 TB join path
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the 100 TB join path
     import graft.sources.Tables
 
     val docs1 = Tables(spark, sfDir, "documents")

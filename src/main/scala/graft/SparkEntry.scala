@@ -193,24 +193,6 @@ object SparkEntry {
     "q_stream_enrich" -> Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"),
     "q_stream_neardup" -> Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))
 
-  /** Per-query CORE (SparkConf) overrides — confs the running context
-    * cannot change (`spark.conf.set` on them is a no-op after SparkEnv
-    * exists), so they only apply where a FRESH JVM runs the query:
-    * Bench fork mode passes them as -D args when
-    * SPARK_GRAFT_SCALE_CONFS=1; a cluster deployment sets them on the
-    * job. In-suite runs keep the global default.
-    *
-    * These are SCALE confs, opt-in by design: q_cooccur's 6.8 GB
-    * pair-count shuffle is single-NVMe-bound at sf10, where zstd's
-    * denser blocks won the interleaved A/B by 12-29% (100.4 vs
-    * 113.8 s, 79.0 vs 110.8 s) — but at sf0.1 the same shuffle is
-    * CPU-bound and zstd LOSES ~45% (interleaved fresh-JVM A/B: lz4
-    * 3.8/4.0 s vs zstd 5.4/5.7 s). The codec choice tracks the DATA
-    * DECADE, not the query, so it is applied only where the
-    * deployment declares the scale — never pinned statically. */
-  val queryCoreConfs: Map[String, Map[String, String]] = Map(
-    "q_cooccur" -> Map("spark.io.compression.codec" -> "zstd"))
-
   /** Fully materialize every output row of the query's OWN physical
     * plan and return the row count — the honest bench/profile drive.
     *

@@ -7,21 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all specs (one JVM-wide instance; forked
   * test JVM exits at the end, so it is never stopped explicitly). */
 object SparkSpec {
-  lazy val session: SparkSession = {
-    CodegenGuard.install()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val session: SparkSession = GraftSession.harness(cpus = 4)
   val sfDir = "/root/testdata/sf0.001"
 }
 

@@ -19,5 +19,4 @@ done
 HEAP="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' \
   /proc/meminfo 2>/dev/null || echo 2g)"
 SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_REPS="$REPS" SPARK_GRAFT_ONLY="$ONLY" \
-  java $OPENS -Xmx$HEAP -Dspark.ui.enabled=false \
-  -cp "$CP" graft.Bench
+  java $OPENS -Xmx$HEAP -cp "$CP" graft.Bench

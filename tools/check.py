@@ -20,6 +20,17 @@ SKIP_VERIFY = "--skip-verify" in sys.argv
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
+def heap():
+    """The Tier-1 rule (as tools/bench.sh and perfbench/run.py apply it):
+    half of physical memory, clamped to 2..8 GB."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+        g = kb // 2097152
+    except (OSError, StopIteration):
+        g = 2
+    return f"-Xmx{min(max(g, 2), 8)}g"
+
 def run_verify():
     jars = ":".join(glob.glob("/opt/spark/jars/*.jar"))
     cp = f"{REPO}/target/scala-2.13/classes:{jars}"
@@ -30,9 +41,7 @@ def run_verify():
               "sun.security.action", "sun.util.calendar"]:
         opens += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
     cmd = ["java"] + opens + [
-        "-Xmx8g", "-Dspark.ui.enabled=false",
-        "-Dspark.sql.session.timeZone=UTC",
-        "-cp", cp, "graft.Verify", SF, OUT]
+        heap(), "-cp", cp, "graft.Verify", SF, OUT]
     env = dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     r = subprocess.run(cmd, capture_output=True, text=True, env=env)
     sys.stdout.write(r.stdout[-4000:])
