@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.queries.QuerySpec
 
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints two JSON lines: the full per-query record, then a compact
@@ -23,45 +24,41 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = math.max(sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt, 1)
     // Optional comma-separated subset for targeted runs (regression
-    // attribution, scale spot checks); empty/unset = the full suite.
+    // attribution, scale spot checks); empty/unset = the full suite,
+    // an unknown name fails before any session starts.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim)
       .filter(_.nonEmpty).toSet).filter(_.nonEmpty)
+    val selected = only.fold(QuerySpec.all)(QuerySpec.select)
     val spark = GraftSession.harness()
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
-      case None => SparkEntry.queries
-    }
     // Single-rep runs keep an untimed warmup pass (JIT + codegen +
     // parquet footers); with reps > 1 the first rep plays that role and
     // the minimum strips it.
     if (reps == 1)
-      selected.foreach { case (name, fn) =>
-        try SparkEntry.withQueryConfs(spark, name) { SparkEntry.materialize(fn(spark, sfDir)) }
+      selected.foreach { q =>
+        try q.run(spark, sfDir)(SparkEntry.materialize)
         catch { case _: Throwable => () }
       }
-    val outcomes = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val outcomes = selected.sortBy(_.name).map { q =>
       val times = Seq.newBuilder[Double]
       var err: Option[String] = None
       var r = 0
       while (r < reps && err.isEmpty) {
         val t0 = System.nanoTime()
         try {
-          SparkEntry.withQueryConfs(spark, name) { SparkEntry.materialize(fn(spark, sfDir)) }
+          q.run(spark, sfDir)(SparkEntry.materialize)
           times += (System.nanoTime() - t0) / 1e9
         }
         catch { case e: Throwable => err = Some(e.toString.take(200)) }
         r += 1
       }
       val ts = times.result()
-      // Post-query hygiene (outside the timers): drop whatever the
-      // query left persisted (iterative operators checkpoint their
-      // RESULT, which must outlive the query but not the suite) and
-      // nudge the ContextCleaner so unreferenced broadcasts/shuffles
-      // actually get removed — otherwise 100+ queries of accumulated
-      // state turn into GC pressure that inflates later timings.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      // Post-query hygiene (outside the timers), plus a nudge to the
+      // ContextCleaner so unreferenced broadcasts/shuffles actually get
+      // removed — otherwise 100+ queries of accumulated state turn into
+      // GC pressure that inflates later timings.
+      GraftSession.unpersistAll(spark)
       System.gc()
-      (name, if (ts.isEmpty) 0.0 else ts.min, err)
+      (q.name, if (ts.isEmpty) 0.0 else ts.min, err)
     }
     val ok = outcomes.filter(_._3.isEmpty)
     val qs = ok.map { case (k, v, _) => Json.str(k) + ":" + f"$v%.3f" }

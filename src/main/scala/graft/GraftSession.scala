@@ -71,4 +71,13 @@ object GraftSession {
     CodegenGuard.install()
     s
   }
+
+  /** Post-query hygiene for the harnesses, outside any timer: drop
+    * whatever the query left persisted. Iterative operators (dsir,
+    * pagerank, components…) checkpoint their RESULT, which must outlive
+    * the query but not the next one; otherwise one block set per query
+    * (or per rep) accumulates into GC pressure that inflates later
+    * timings. */
+  def unpersistAll(s: SparkSession): Unit =
+    s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.FormattedMode
+import graft.queries.QuerySpec
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -15,7 +16,7 @@ import scala.collection.mutable.ArrayBuffer
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val name = args(1)
+    val q = QuerySpec.named(args(1))
     val reps = if (args.length > 2) args(2).toInt else 2
     val spark = GraftSession.harness()
 
@@ -34,7 +35,6 @@ object Profile {
       }
     })
 
-    val fn = SparkEntry.queries(name)
     var last: org.apache.spark.sql.DataFrame = null
     var r = 0
     while (r < reps) {
@@ -43,16 +43,10 @@ object Profile {
       // materialize, not count(): count() re-optimizes and prunes the
       // expensive output expressions (see SparkEntry.materialize) —
       // this tool exists to attribute REAL cost
-      val n = SparkEntry.withQueryConfs(spark, name) {
-        last = fn(spark, sfDir); SparkEntry.materialize(last)
-      }
+      val n = q.run(spark, sfDir) { df => last = df; SparkEntry.materialize(df) }
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"== rep $r: $dt%.3f s, $n rows")
-      // Same post-query hygiene as Bench/Verify: eager+pinned Mat
-      // checkpoints (dsir, pagerank, components…) otherwise accumulate
-      // one block set PER REP and the later reps measure GC thrash,
-      // not the query.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      GraftSession.unpersistAll(spark)
       if (r == reps - 1) {
         println(f"${"stage"}%8s ${"ms"}%8s ${"tasks"}%6s ${"inMB"}%8s ${"shRdMB"}%8s ${"shWrMB"}%8s  name")
         stages.sortBy(_.id).foreach { s =>

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.analytics.Analytics
+import graft.queries.QuerySpec
 import graft.sources.{Export, Sources, Tables}
 import graft.sources.Sources.Year
 
@@ -440,7 +441,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_range_join: unscaled-long sum — decimal cast fenced below the join") {
-    val p = planOf(SparkEntry.queries("q_range_join")(spark, sfDir))
+    val p = planOf(QuerySpec.named("q_range_join").build(spark, sfDir))
     // overlapping windows fan each event out ~240× at sf1, so the pair
     // stream must sum LONGS (fast hash map), never decimals (measured
     // 15.6 s vs 2.3 s); the one decimal rebuild happens per GROUP
@@ -449,7 +450,7 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("sum(__uv"), s"missing unscaled-long sum:\n$p")
     // the MakeDecimal rebuild folds into the final aggregate's result
     // expressions (invisible in the summary string) — pin it logically
-    val op = SparkEntry.queries("q_range_join")(spark, sfDir)
+    val op = QuerySpec.named("q_range_join").build(spark, sfDir)
       .queryExecution.optimizedPlan.toString()
     assert(op.contains("MakeDecimal"), s"missing per-group decimal rebuild:\n$op")
     // the per-event cast must sit BELOW the repartition barrier, below
@@ -472,7 +473,7 @@ class PlanSpec extends SparkSpec {
     * key and sort within partitions — the plan must show exactly one
     * exchange (a range one), and no global sort. */
   private def assertRangeThenLocalSort(name: String): Unit = {
-    val p = planOf(SparkEntry.queries(name)(spark, sfDir))
+    val p = planOf(QuerySpec.named(name).build(spark, sfDir))
     val exchanges = "Exchange (range|hash)partitioning".r.findAllIn(p).toSeq
     assert(exchanges.size == 1 && exchanges.head.contains("rangepartitioning"),
       s"$name: expected exactly one RANGE exchange, got $exchanges in:\n$p")
@@ -492,7 +493,7 @@ class PlanSpec extends SparkSpec {
     // the r11 recipe variant that KEEPS orderBy: over range-partitioned
     // input the global sort satisfies OrderedDistribution and plans no
     // exchange of its own — a second exchange here means the recipe broke
-    val p = planOf(SparkEntry.queries("q_parse_dates")(spark, sfDir))
+    val p = planOf(QuerySpec.named("q_parse_dates").build(spark, sfDir))
     val exchanges = "Exchange (range|hash)partitioning".r.findAllIn(p).toSeq
     assert(exchanges.size == 1 && exchanges.head.contains("rangepartitioning"),
       s"q_parse_dates: expected exactly one RANGE exchange, got $exchanges in:\n$p")
@@ -503,7 +504,7 @@ class PlanSpec extends SparkSpec {
     // vocab join stays broadcast the aggregation needs no doc-keyed hash
     // exchange and the final orderBy plans no exchange — one doc_id
     // exchange total, and it is the range one
-    val p = planOf(SparkEntry.queries("q_tokenize")(spark, sfDir))
+    val p = planOf(QuerySpec.named("q_tokenize").build(spark, sfDir))
     assert("rangepartitioning\\(doc_id".r.findAllIn(p).size == 1,
       s"q_tokenize: expected exactly one doc_id range exchange:\n$p")
     // the vocab df-count legitimately shuffles on (doc_id, term) — what
@@ -519,7 +520,7 @@ class PlanSpec extends SparkSpec {
     // the join, so the rebuild projection runs once and the caller's
     // orderBy is exchange-free regardless of join strategy. A second
     // range exchange = the recipe broke and orderBy re-sorted globally.
-    val p = planOf(SparkEntry.queries("q_substr_scrub")(spark, sfDir))
+    val p = planOf(QuerySpec.named("q_substr_scrub").build(spark, sfDir))
     assert("rangepartitioning\\(doc_id".r.findAllIn(p).size == 1,
       s"q_substr_scrub: expected exactly one doc_id range exchange:\n$p")
   }

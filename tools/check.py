@@ -2,11 +2,13 @@
 """Local correctness harness (dev-only, mirrors the driver's gate):
 run graft.Verify on a scale-factor dir, then compare each query's parquet
 output against its DuckDB oracle SQL: column names, row count, and
-sorted-row values must match exactly.
+sorted-row values must match exactly. The output directory is cleared
+before Verify runs, a query Verify reports as failed counts as FAIL, and
+the exit code is non-zero when anything fails.
 
-Usage: python3 tools/check.py [sfdir] [--only q1,q2] [--skip-verify]
+Usage: python3 tools/check.py [sfdir] [--only=q1,q2] [--skip-verify]
 """
-import json, math, os, subprocess, sys, glob
+import json, math, os, re, shutil, subprocess, sys, glob
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") else "/root/testdata/sf0.01"
@@ -42,15 +44,23 @@ def run_verify():
         opens += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
     cmd = ["java"] + opens + [
         heap(), "-cp", cp, "graft.Verify", SF, OUT]
+    if ONLY:
+        cmd.append("--only=" + ",".join(sorted(ONLY)))
+    shutil.rmtree(OUT, ignore_errors=True)
     env = dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     r = subprocess.run(cmd, capture_output=True, text=True, env=env)
     sys.stdout.write(r.stdout[-4000:])
     if r.returncode != 0:
         sys.stderr.write(r.stderr[-8000:])
         sys.exit(f"Verify failed rc={r.returncode}")
+    failed = {}
     for line in r.stderr.splitlines():
         if "[verify]" in line:
             print(line)
+            m = re.match(r"\[verify\] (\S+) failed: (.*)", line)
+            if m:
+                failed[m.group(1)] = m.group(2)
+    return failed
 
 def norm(v):
     if v is None:
@@ -63,19 +73,18 @@ def norm(v):
 
 def main():
     import duckdb
-    if not SKIP_VERIFY:
-        run_verify()
+    failed = {} if SKIP_VERIFY else run_verify()
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
     oracle = json.load(open(f"{OUT}/oracle_sql.json"))
-    results = {}
+    results = {n: f"VERIFY FAILED: {e[:200]}" for n, e in failed.items()}
     names = sorted(os.listdir(OUT))
     for name in names:
         path = os.path.join(OUT, name)
         if not os.path.isdir(path):
             continue
-        if ONLY and name not in ONLY:
+        if ONLY and name not in ONLY or name in failed:
             continue
         try:
             mine = con.sql(f"SELECT * FROM read_parquet('{path}/*.parquet')")
@@ -117,7 +126,10 @@ def main():
         ok = r.startswith("OK") or r.startswith("ROWS-ONLY") and "!!EMPTY" not in r
         npass += ok
         print(f"{'PASS' if ok else 'FAIL'}  {name:<{width}}  {r}")
-    print(f"== {npass}/{len(results)} pass")
+    nmatch = sum(r.startswith("OK") for r in results.values())
+    print(f"== {npass}/{len(results)} pass ({nmatch} oracle-matched)")
+    if npass != len(results):
+        sys.exit(1)
 
 if __name__ == "__main__":
     main()
