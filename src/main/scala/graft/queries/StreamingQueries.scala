@@ -1,12 +1,32 @@
 package graft
 package queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
+import graft.sources.Tables
 import graft.streaming.Streams
+import graft.streaming.Streams.runToMemory
 import QuerySpec._
 
-/** Structured Streaming operators, each run to a memory sink. */
+/** Structured Streaming operators, each over its table's file stream
+  * and run to a memory sink. */
 object StreamingQueries {
+  private def events(s: SparkSession, dir: String): DataFrame =
+    Tables.stream(s, dir, "events")
+
+  /** [[Tables.stream]] plus a round-robin repartition of the raw rows,
+    * for streams whose PRE-shuffle pipeline is expensive (shingle
+    * signatures, C4/Gopher text scoring): a single-file micro-batch
+    * arrives as ONE input partition, and every projection between the
+    * source and the first stateful shuffle then runs on one core —
+    * observed as a 32x slowdown of the near-dup signature kernel. Light
+    * streams skip this (the exchange of raw rows is pure overhead when
+    * the projection is cheap); results are partition-independent
+    * either way (keyed state, deterministic winners). */
+  private def parallelStream(s: SparkSession, dir: String, name: String): DataFrame =
+    Tables.stream(s, dir, name).repartition(s.sparkContext.defaultParallelism)
+
   /** An INNER stream-stream join or a Complete-mode sink emits every
     * result row inside the data batch itself (Complete re-emits the
     * full table each batch; dropDuplicatesWithinWatermark and the
@@ -20,7 +40,8 @@ object StreamingQueries {
 
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("q_stream_window", (s, dir) =>
-      Streams.windowAgg(s, dir).orderBy("window_start_us", "event_type"),
+      runToMemory(Streams.windowAggStream(events(s, dir)), OutputMode.Complete())
+        .orderBy("window_start_us", "event_type"),
       Sql("""SELECT CAST(epoch_us(time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP))) AS BIGINT) AS window_start_us,
         |  event_type, CAST(count(*) AS BIGINT) AS n,
         |  CAST(round(sum(CAST(value AS DECIMAL(30,10))), 2) AS DOUBLE) AS total_value
@@ -28,7 +49,8 @@ object StreamingQueries {
         |GROUP BY 1, 2 ORDER BY window_start_us, event_type""".stripMargin),
       confs = noDataBatchesOff),
     QuerySpec("q_stream_topk", (s, dir) =>
-      Streams.topValues(s, dir, k = 3).orderBy("window_start_us", "event_type"),
+      runToMemory(Streams.topValuesStream(events(s, dir), k = 3), OutputMode.Complete())
+        .orderBy("window_start_us", "event_type"),
       Sql("""WITH e AS (SELECT time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP)) AS w,
         |    event_type, CAST(value AS DECIMAL(18,6)) AS d
         |  FROM events),
@@ -45,7 +67,8 @@ object StreamingQueries {
     // (fMGWS also closes a session the moment its successor arrives),
     // so its oracle keeps just the watermark visibility condition.
     QuerySpec("q_stream_sessions_native", (s, dir) =>
-      Streams.sessionizeNative(s, dir).orderBy("user_id", "start_us"),
+      runToMemory(Streams.sessionizeNativeStream(events(s, dir)), OutputMode.Append())
+        .orderBy("user_id", "start_us"),
       Sql("""WITH e AS (SELECT CAST(user_id AS BIGINT) AS user_id, epoch_us(ts) AS t FROM events),
         |m AS (SELECT max(t) AS mx FROM e),
         |s AS (SELECT user_id, t,
@@ -94,18 +117,26 @@ object StreamingQueries {
     // Watermark-bounded streaming dedup: event_id is unique in the
     // corpus, so every event passes exactly once and the oracle is the
     // full table — pinning that the stateful pipeline neither drops nor
-    // duplicates (DedupSpec covers the duplicate-dropping case).
+    // duplicates (EngineSpec's streaming-dedupe tests cover dropping a
+    // re-delivered key).
     QuerySpec("q_stream_dedupe", (s, dir) =>
-      Streams.dedupeStream(s, dir).orderBy("event_id"),
+      runToMemory(Streams.dedupeStreamDf(events(s, dir)), OutputMode.Append())
+        .orderBy("event_id"),
       Sql("""SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us
         |FROM events ORDER BY event_id""".stripMargin),
       confs = noDataBatchesOff),
     // Streaming near-dup dedup on an md5-minhash signature built from
     // builtin functions only — the oracle recomputes the signature
     // bit-for-bit (md5, min over distinct 5-gram shingles) and takes
-    // min(doc_id) per group, so survivor choice is fully checkable.
-    QuerySpec("q_stream_neardup", (s, dir) =>
-      Streams.neardupStream(s, dir).orderBy("keep_id"),
+    // min(doc_id) per group, so survivor choice is fully checkable. The
+    // event time is derived from doc_id, so it is deterministic.
+    QuerySpec("q_stream_neardup", (s, dir) => {
+      val docs = parallelStream(s, dir, "documents")
+        .withColumn("__evt", timestamp_micros((col("doc_id") + 86400L) * 1000000L))
+      runToMemory(Streams.neardupStreamDf(docs, "doc_id", "text", "__evt"),
+          OutputMode.Append())
+        .orderBy("keep_id")
+    },
       Sql("""WITH nrm AS (SELECT doc_id,
         |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS t FROM documents),
         |g AS (SELECT doc_id,
@@ -123,7 +154,9 @@ object StreamingQueries {
         |ORDER BY keep_id""".stripMargin),
       confs = noDataBatchesOff),
     QuerySpec("q_stream_enrich", (s, dir) =>
-      Streams.enrich(s, dir).orderBy("window_start_us", "tier"),
+      runToMemory(Streams.enrichStream(events(s, dir), T(s, dir, "orders")),
+          OutputMode.Complete())
+        .orderBy("window_start_us", "tier"),
       Sql("""WITH dim AS (SELECT o_custkey AS user_id,
         |    CASE WHEN sum(CAST(o_totalprice AS DECIMAL(30,10))) > 2500000
         |         THEN 'high' ELSE 'low' END AS tier
@@ -135,7 +168,8 @@ object StreamingQueries {
         |GROUP BY 1, 2 ORDER BY window_start_us, tier""".stripMargin),
       confs = noDataBatchesOff),
     QuerySpec("q_stream_joined", (s, dir) =>
-      Streams.intervalJoin(s, dir).orderBy("click_id", "purchase_id"),
+      runToMemory(Streams.intervalJoinStream(events(s, dir)), OutputMode.Append())
+        .orderBy("click_id", "purchase_id"),
       Sql("""SELECT c.event_id AS click_id, p.event_id AS purchase_id,
         |  epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
         |FROM events c JOIN events p
@@ -158,7 +192,8 @@ object StreamingQueries {
     // finalizes each probe's version set; visibility = events strictly
     // below the final watermark (max ts - 30min), mirrored by the oracle.
     QuerySpec("q_stream_asof", (s, dir) =>
-      Streams.temporalEnrich(s, dir).orderBy("event_id"),
+      runToMemory(Streams.temporalEnrichStream(events(s, dir)), OutputMode.Append())
+        .orderBy("event_id"),
       Sql(// the horizon is the MILLISECOND-floored Spark watermark (event
       // times are tracked in ms), not the raw max microsecond
       """WITH m AS (SELECT (max(epoch_us(ts)) // 1000) * 1000 AS mx FROM events),
@@ -175,12 +210,9 @@ object StreamingQueries {
     // the cleaned text, in-flight, zero state — identical operators
     // serve batch and stream, so the oracle is simply the batch chain.
     QuerySpec("q_stream_quality", (s, dir) => {
-      val docs = Streams.readTableStreamParallel(s, dir, "documents")
+      val docs = parallelStream(s, dir, "documents")
         .select(col("doc_id"), c4Injected.as("text"))
-      Streams.runToMemory(
-          Streams.curationGateStream(docs, "doc_id", "text"),
-          s"graft_stream_quality_${System.nanoTime()}",
-          org.apache.spark.sql.streaming.OutputMode.Append())
+      runToMemory(Streams.curationGateStream(docs, "doc_id", "text"), OutputMode.Append())
         .orderBy("doc_id")
     }, Sql(s"""WITH $c4InjectedSql,
         |cl AS (SELECT doc_id,

@@ -27,8 +27,20 @@ object Tables {
       df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
     else df
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    normalizeEventTs(raw(spark, dir, name))
+
+  /** The same table as a micro-batch file stream: the batch file's
+    * schema and the same `ts` normalization as [[apply]]. The file-stream
+    * source reads a directory, so the glob filter selects this table's
+    * file out of the shared scale-factor directory. */
+  def stream(spark: SparkSession, dir: String, name: String): DataFrame =
+    normalizeEventTs(spark.readStream.schema(raw(spark, dir, name).schema)
+      .option("pathGlobFilter", s"$name.parquet")
+      .parquet(dir))
+
+  private def raw(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTs(spark.read.parquet(s"$dir/$name.parquet"))
+    spark.read.parquet(s"$dir/$name.parquet")
   }
 }

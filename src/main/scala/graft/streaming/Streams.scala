@@ -3,58 +3,50 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import graft.sources.Tables
 
-/** Structured Streaming operators over the `events` table: tumbling-
-  * window aggregation and gap-based sessionization.
+/** Structured Streaming operators. Each is a function of a streaming
+  * DataFrame that returns the pre-sink streaming DataFrame, so the
+  * same operator runs over a file, kafka or test micro-batch source:
   *
-  * Both run as genuine streaming queries (file source → stateful op →
-  * memory sink, Trigger.AvailableNow) and produce batch-equivalent
-  * results the DuckDB oracle can check: the windowed agg runs in
-  * `complete` mode (all windows), the sessionizer emits sessions closed
-  * by the event-time watermark.
+  *  - [[windowAggStream]], [[topValuesStream]]: tumbling-window
+  *    aggregates (count + sum, bounded-heap top-k);
+  *  - [[sessionizeStreamDf]], [[sessionizeNativeStream]]: gap-based
+  *    sessions (flatMapGroupsWithState, built-in `session_window`);
+  *  - [[dedupeStreamDf]], [[neardupStreamDf]],
+  *    [[simhashCandidatesStream]]: exact, signature and SimHash dedup;
+  *  - [[enrichStream]], [[intervalJoinStream]], [[temporalEnrichStream]]:
+  *    stream-static, stream-stream interval and as-of joins;
+  *  - [[curationGateStream]]: the stateless C4 → Gopher gate.
+  *
+  * [[graft.sources.Tables.stream]] reads a table as a stream.
+  * [[runToMemory]] (oracle and test harness) and [[runToFileSink]] (at
+  * scale) drive a stream with Trigger.AvailableNow; [[sessionize]] is
+  * the one directory entry point, the batch-equivalent sessions of the
+  * `events` table.
   *
   * Scale notes: state is bounded by the watermark (windows expire,
-  * sessions time out); sessionization state is one open session per key.
+  * sessions time out); sessionization state is the open sessions of
+  * each key.
   */
 object Streams {
 
-  /** Micro-batch file stream over one parquet table (events.ts nanosecond
-    * normalization applied the same way as the batch reader). */
-  def readTableStream(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/$name.parquet").schema
-    // The file-stream source requires a directory; select just this
-    // table's file out of the shared sf directory via the glob filter.
-    graft.sources.Tables.normalizeEventTs(
-      spark.readStream.schema(schema)
-        .option("pathGlobFilter", s"$name.parquet")
-        .parquet(dir))
-  }
-
-  /** [[readTableStream]] plus a round-robin repartition of the raw
-    * rows. Use for streams whose PRE-shuffle pipeline is expensive
-    * (shingle signatures, C4/Gopher text scoring): a single-file
-    * micro-batch arrives as ONE input partition, and every projection
-    * between the source and the first stateful shuffle then runs on one
-    * core — observed as a 32x slowdown of the near-dup signature
-    * kernel. Light streams skip this (the exchange of raw rows is pure
-    * overhead when the projection is cheap); results are partition-
-    * independent either way (keyed state, deterministic winners). */
-  def readTableStreamParallel(spark: SparkSession, dir: String,
-                              name: String): DataFrame =
-    readTableStream(spark, dir, name)
-      .repartition(spark.sparkContext.defaultParallelism)
+  private val memorySinks = new java.util.concurrent.atomic.AtomicLong()
 
   /** Drive an unbounded DataFrame to a memory sink and return the
     * result table — the ORACLE/TEST harness path only: a memory sink
     * materializes in driver heap, so result size is capped there. The
     * operator APIs below return the pre-sink streaming DataFrame; at
-    * scale attach [[runToFileSink]] (or kafka/foreachBatch) instead. */
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode): DataFrame = {
+    * scale attach [[runToFileSink]] (or kafka/foreachBatch) instead.
+    * The sink's temp view is dropped before returning: the returned
+    * frame holds the sink's rows, and the session keeps no reference
+    * to them once that frame is released. */
+  def runToMemory(df: DataFrame, mode: OutputMode): DataFrame = {
+    val name = s"graft_memory_sink_${memorySinks.incrementAndGet()}"
     val q = df.writeStream.format("memory").queryName(name)
       .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    df.sparkSession.table(name)
+    try { q.awaitTermination(); df.sparkSession.table(name) }
+    finally df.sparkSession.catalog.dropTempView(name)
   }
 
   /** Drive an unbounded DataFrame to a distributed file sink (append
@@ -71,10 +63,11 @@ object Streams {
     s"$outDir/data"
   }
 
-  /** Tumbling-window agg (pre-sink, unbounded): per (event_type, hour)
-    * count + sum(value). */
-  def windowAggStream(spark: SparkSession, dir: String): DataFrame =
-    readTableStream(spark, dir, "events")
+  /** Tumbling-window agg (pre-sink, unbounded) over events: per
+    * (event_type, hour) count + sum(value). A Complete-mode run emits
+    * every window, identical to the batch time_bucket. */
+  def windowAggStream(events: DataFrame): DataFrame =
+    events
       .withWatermark("ts", "30 minutes")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       // Decimal-exact sum: double partial sums are order-dependent across
@@ -84,12 +77,6 @@ object Streams {
       .select(unix_micros(col("w.start")).as("window_start_us"),
         col("event_type"), col("n"), col("total_value"))
 
-  /** Complete-mode memory-sink run of [[windowAggStream]] → every
-    * window, identical to the batch time_bucket (oracle harness). */
-  def windowAgg(spark: SparkSession, dir: String): DataFrame =
-    runToMemory(windowAggStream(spark, dir),
-      s"graft_stream_window_${System.nanoTime()}", OutputMode.Complete())
-
   /** Streaming top-k (pre-sink, unbounded): per (hour window, type),
     * the k largest event values — the custom bounded-heap
     * [[graft.functions.TopKLargest]] aggregate running INSIDE a
@@ -97,9 +84,9 @@ object Streams {
     * (merged across micro-batches), never the value list. Values are
     * carried as decimal(18,6) so the CSV rendering is digit-identical
     * on both engines. */
-  def topValuesStream(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    readTableStream(spark, dir, "events")
+  def topValuesStream(events: DataFrame, k: Int = 3): DataFrame = {
+    graft.functions.GraftFunctions.ensureRegistered(events.sparkSession)
+    events
       .withWatermark("ts", "30 minutes")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(graft.functions.GraftFunctions.topKLargest(
@@ -113,29 +100,19 @@ object Streams {
           .as("top_csv"))
   }
 
-  def topValues(spark: SparkSession, dir: String, k: Int = 3): DataFrame =
-    runToMemory(topValuesStream(spark, dir, k),
-      s"graft_stream_topk_${System.nanoTime()}", OutputMode.Complete())
-
   /** Streaming deduplication (pre-sink, unbounded): drop events whose
     * key was already seen within the watermark horizon
     * (`dropDuplicatesWithinWatermark` — state stays bounded by event
     * time, unlike a full-history distinct). The staple in-flight dedup
     * stage of a streaming ingest pipeline. */
-  def dedupeStreamDf(spark: SparkSession, dir: String,
+  def dedupeStreamDf(events: DataFrame,
                      keyCols: Seq[String] = Seq("event_id"),
                      watermarkMinutes: Int = 60): DataFrame =
-    readTableStream(spark, dir, "events")
+    events
       .withWatermark("ts", s"$watermarkMinutes minutes")
       .dropDuplicatesWithinWatermark(keyCols)
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("ts_us"))
-
-  def dedupeStream(spark: SparkSession, dir: String,
-                   keyCols: Seq[String] = Seq("event_id"),
-                   watermarkMinutes: Int = 60): DataFrame =
-    runToMemory(dedupeStreamDf(spark, dir, keyCols, watermarkMinutes),
-      s"graft_stream_dedupe_${System.nanoTime()}", OutputMode.Append())
 
   /** Stream-static enrichment (pre-sink, unbounded): the streaming
     * events join a BATCH dimension — per-customer lifetime spend tier
@@ -144,19 +121,19 @@ object Streams {
     * batch join (broadcast while it fits, shuffled once it doesn't);
     * only the windowed aggregation keeps streaming state, and that
     * state is watermark-evicted under an APPEND-mode sink (file/kafka
-    * at scale — [[runToFileSink]]). The Complete-mode memory-sink
-    * wrapper [[enrich]] below retains all windows by definition; it
-    * exists only as the oracle harness. This is the standard "enrich
-    * the firehose against a dimension snapshot" pipeline stage. */
-  def enrichStream(spark: SparkSession, dir: String,
+    * at scale — [[runToFileSink]]). A Complete-mode memory sink, the
+    * oracle harness, retains all windows by definition. This is the
+    * standard "enrich the firehose against a dimension snapshot"
+    * pipeline stage. */
+  def enrichStream(events: DataFrame, orders: DataFrame,
                    spendCutoff: Long = 2500000L): DataFrame = {
-    val dim = graft.sources.Tables(spark, dir, "orders")
+    val dim = orders
       .groupBy(col("o_custkey"))
       .agg(sum(col("o_totalprice").cast("decimal(30,10)")).as("spend"))
       .select(col("o_custkey").as("user_id"),
         when(col("spend") > lit(spendCutoff).cast("decimal(30,10)"), "high")
           .otherwise("low").as("tier"))
-    readTableStream(spark, dir, "events")
+    events
       .withWatermark("ts", "30 minutes")
       .join(dim, "user_id")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("tier"))
@@ -166,24 +143,21 @@ object Streams {
         col("tier"), col("n"), col("total_value"))
   }
 
-  def enrich(spark: SparkSession, dir: String): DataFrame =
-    runToMemory(enrichStream(spark, dir),
-      s"graft_stream_enrich_${System.nanoTime()}", OutputMode.Complete())
-
   /** Stream-STREAM interval join (pre-sink, unbounded): each click
     * joined to the same user's purchases in the following hour. Both
-    * sides are independent watermarked streams and the join condition
+    * sides are watermarked filters of the one events stream (a self-
+    * join: each micro-batch feeds both join buffers) and the condition
     * bounds the event-time gap, so Spark can evict both join buffers:
     * click state is needed for at most (1h join range + purchase
     * watermark), purchase state for the click watermark. Append mode —
     * a match emits once, when both rows have arrived. */
-  def intervalJoinStream(spark: SparkSession, dir: String): DataFrame = {
-    val clicks = readTableStream(spark, dir, "events")
+  def intervalJoinStream(events: DataFrame): DataFrame = {
+    val clicks = events
       .filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
         col("ts").as("c_ts"))
       .withWatermark("c_ts", "30 minutes")
-    val purchases = readTableStream(spark, dir, "events")
+    val purchases = events
       .filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
         col("ts").as("p_ts"))
@@ -196,12 +170,6 @@ object Streams {
         (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us"))
   }
 
-  def intervalJoin(spark: SparkSession, dir: String): DataFrame =
-    runToMemory(intervalJoinStream(spark, dir),
-      s"graft_stream_joined_${System.nanoTime()}", OutputMode.Append())
-
-  final case class SimDoc(band_id: Int, band_val: Long, doc_id: Long,
-                          sim: Long, ts_us: Long)
   final case class NearDup(id_a: Long, id_b: Long, hamming: Int)
   final case class SigKeep(keep_id: Long, sig: String)
   final case class SigState(winner_id: Long, winner_ts_us: Long,
@@ -316,16 +284,6 @@ object Streams {
           out
       }
       .toDF()
-  }
-
-  /** Memory-sink wrapper of [[neardupStreamDf]] over the documents
-    * table with a deterministic doc_id-derived event time (oracle
-    * harness; file/kafka sinks at scale). */
-  def neardupStream(spark: SparkSession, dir: String): DataFrame = {
-    val docs = readTableStreamParallel(spark, dir, "documents")
-      .withColumn("__evt", timestamp_micros((col("doc_id") + 86400L) * 1000000L))
-    runToMemory(neardupStreamDf(docs, "doc_id", "text", "__evt"),
-      s"graft_stream_neardup_${System.nanoTime()}", OutputMode.Append())
   }
 
   /** Streaming near-duplicate CANDIDATE generation (pre-sink,
@@ -468,11 +426,12 @@ object Streams {
     * enrich to None — a retention policy, not a correctness change).
     * Append mode; file/kafka sinks at scale, memory sink in the oracle
     * harness. */
-  def temporalEnrichStream(spark: SparkSession, dir: String,
+  def temporalEnrichStream(events: DataFrame,
                            watermarkMinutes: Int = 30,
                            idleTtlMinutes: Option[Int] = None): DataFrame = {
+    val spark = events.sparkSession
     import spark.implicits._
-    val ev = readTableStream(spark, dir, "events")
+    val ev = events
       .withWatermark("ts", s"$watermarkMinutes minutes")
       .select(col("user_id").cast("long").as("user_id"),
         col("event_id").cast("long").as("event_id"),
@@ -552,19 +511,13 @@ object Streams {
       .toDF()
   }
 
-  /** Memory-sink run of [[temporalEnrichStream]] (oracle harness). */
-  def temporalEnrich(spark: SparkSession, dir: String,
-                     watermarkMinutes: Int = 30): DataFrame =
-    runToMemory(temporalEnrichStream(spark, dir, watermarkMinutes),
-      s"graft_stream_asof_${System.nanoTime()}", OutputMode.Append())
-
-  final case class Ev(user_id: Long, ts_us: Long)
   final case class SessState(start_us: Long, end_us: Long, n: Long)
   final case class SessionsState(sessions: List[SessState])
   final case class Session(user_id: Long, start_us: Long, end_us: Long, n_events: Long)
 
-  /** Gap-based sessionization (pre-sink, unbounded) via
-    * flatMapGroupsWithState with event-time timeout.
+  /** Gap-based sessionization (pre-sink, unbounded) of a streaming
+    * frame with `user_id` and `ts` columns, via flatMapGroupsWithState
+    * with event-time timeout.
     *
     * CORRECTNESS UNDER OUT-OF-ORDER ARRIVAL (the whole point of the
     * watermark contract): state per user is a SET of disjoint session
@@ -579,13 +532,6 @@ object Streams {
     * out-of-order events (an irrevocable split of what the oracle
     * computes as one session). State stays bounded: pending intervals
     * all end within the watermark horizon. */
-  def sessionizeStream(spark: SparkSession, dir: String,
-                       gapMinutes: Int = 30): DataFrame =
-    sessionizeStreamDf(readTableStream(spark, dir, "events"), gapMinutes)
-
-  /** [[sessionizeStream]] over an arbitrary streaming frame with
-    * `user_id` and `ts` columns (the multi-batch out-of-order specs
-    * drive this directly with a file-per-micro-batch source). */
   def sessionizeStreamDf(raw: DataFrame, gapMinutes: Int = 30): DataFrame = {
     val spark = raw.sparkSession
     import spark.implicits._
@@ -632,13 +578,16 @@ object Streams {
     sessions.toDF()
   }
 
-  /** Memory-sink run of [[sessionizeStream]] (oracle harness). */
+  /** The closed sessions of the `events` table under `dir`: a
+    * memory-sink run of [[sessionizeStreamDf]] over the table's stream,
+    * the batch-equivalent answer a streamed run over the same files
+    * must reproduce. The one `Streams` entry point that opens a path. */
   def sessionize(spark: SparkSession, dir: String,
                  gapMinutes: Int = 30): DataFrame =
-    runToMemory(sessionizeStream(spark, dir, gapMinutes),
-      s"graft_stream_sessions_${System.nanoTime()}", OutputMode.Append())
+    runToMemory(sessionizeStreamDf(Tables.stream(spark, dir, "events"), gapMinutes),
+      OutputMode.Append())
 
-  /** The built-in twin of [[sessionizeStream]]: Spark's native
+  /** The built-in twin of [[sessionizeStreamDf]]: Spark's native
     * `session_window` aggregation instead of hand-rolled
     * flatMapGroupsWithState — prefer this form when the per-session
     * output is expressible as aggregates (state merging, watermark
@@ -652,10 +601,10 @@ object Streams {
     * SQL and EngineSpec pins the subset relation between them.
     * `end_us` is the LAST EVENT time (window end minus the
     * gap), matching the fMGWS output exactly. */
-  def sessionizeNativeStream(spark: SparkSession, dir: String,
+  def sessionizeNativeStream(events: DataFrame,
                              gapMinutes: Int = 30): DataFrame = {
     val gapUs = gapMinutes * 60L * 1000000L
-    readTableStream(spark, dir, "events")
+    events
       .withWatermark("ts", s"$gapMinutes minutes")
       .groupBy(col("user_id").cast("long").as("user_id"),
         session_window(col("ts"), s"$gapMinutes minutes").as("w"))
@@ -663,9 +612,4 @@ object Streams {
       .select(col("user_id"), unix_micros(col("w.start")).as("start_us"),
         (unix_micros(col("w.end")) - gapUs).as("end_us"), col("n_events"))
   }
-
-  def sessionizeNative(spark: SparkSession, dir: String,
-                       gapMinutes: Int = 30): DataFrame =
-    runToMemory(sessionizeNativeStream(spark, dir, gapMinutes),
-      s"graft_stream_sessions_native_${System.nanoTime()}", OutputMode.Append())
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import graft.catalog.Catalog
 import graft.analytics.Analytics
 import graft.streaming.Streams
@@ -10,6 +11,8 @@ import graft.multimodal.Binary
   * analytics headliners, streaming-vs-batch equivalence, multimodal. */
 class EngineSpec extends SparkSpec {
   import spark.implicits._
+
+  private def eventsStream = graft.sources.Tables.stream(spark, sfDir, "events")
 
   test("catalog query filters state and table_type") {
     val cat = Catalog.catalog(spark, sfDir)
@@ -153,7 +156,8 @@ class EngineSpec extends SparkSpec {
   }
 
   test("streaming windowAgg equals the batch time-bucket aggregation") {
-    val streamed = Streams.windowAgg(spark, sfDir)
+    val streamed = Streams.runToMemory(Streams.windowAggStream(eventsStream),
+        OutputMode.Complete())
       .orderBy("window_start_us", "event_type")
       .as[(Long, String, Long, Double)].collect().toSeq
     val batch = graft.sources.Tables(spark, sfDir, "events")
@@ -172,8 +176,7 @@ class EngineSpec extends SparkSpec {
     // pre-sink DataFrame driven through runToFileSink must produce a
     // parquet directory whose rows hash-match the memory-sink result.
     val out = java.nio.file.Files.createTempDirectory("graft_filesink").toString
-    val path = Streams.runToFileSink(
-      Streams.sessionizeStream(spark, sfDir), out)
+    val path = Streams.runToFileSink(Streams.sessionizeStreamDf(eventsStream), out)
     val fromFile = spark.read.parquet(path)
       .orderBy("user_id", "start_us")
       .as[(Long, Long, Long, Long)].collect().toSeq
@@ -185,7 +188,8 @@ class EngineSpec extends SparkSpec {
   }
 
   test("native session_window emits a subset of the fMGWS sessions, byte-equal") {
-    val native = Streams.sessionizeNative(spark, sfDir)
+    val native = Streams.runToMemory(Streams.sessionizeNativeStream(eventsStream),
+      OutputMode.Append())
     val fmgws = Streams.sessionize(spark, sfDir).toDF(native.columns: _*)
     assert(native.count() > 0)
     // fMGWS additionally emits sessions closed by a successor event
@@ -195,7 +199,8 @@ class EngineSpec extends SparkSpec {
   }
 
   test("stream-static enrichment equals the batch join + window agg") {
-    val streamed = Streams.enrich(spark, sfDir)
+    val streamed = Streams.runToMemory(Streams.enrichStream(eventsStream,
+        graft.sources.Tables(spark, sfDir, "orders")), OutputMode.Complete())
       .orderBy("window_start_us", "tier")
       .as[(Long, String, Long, Double)].collect().toSeq
     val dim = graft.sources.Tables(spark, sfDir, "orders")
@@ -315,7 +320,8 @@ class EngineSpec extends SparkSpec {
   }
 
   test("streaming temporal enrichment equals the batch as-of join on the visible horizon") {
-    val streamed = Streams.temporalEnrich(spark, sfDir)
+    val streamed = Streams.runToMemory(Streams.temporalEnrichStream(eventsStream),
+        OutputMode.Append())
       .orderBy("event_id")
       .as[(Long, Long, Option[Long], Option[Long])].collect().toSeq
     val e = graft.sources.Tables(spark, sfDir, "events")
@@ -340,16 +346,16 @@ class EngineSpec extends SparkSpec {
     // the idle-TTL retention knob changes STATE lifetime, never the
     // emitted rows: same output with an armed (generous) TTL
     val ttld = Streams.runToMemory(
-        Streams.temporalEnrichStream(spark, sfDir, 30, idleTtlMinutes = Some(120)),
-        s"graft_stream_asof_ttl_${System.nanoTime()}",
-        org.apache.spark.sql.streaming.OutputMode.Append())
+        Streams.temporalEnrichStream(eventsStream, 30, idleTtlMinutes = Some(120)),
+        OutputMode.Append())
       .orderBy("event_id")
       .as[(Long, Long, Option[Long], Option[Long])].collect().toSeq
     assert(ttld == streamed)
   }
 
   test("stream-stream interval join equals the batch inequality join") {
-    val streamed = Streams.intervalJoin(spark, sfDir)
+    val streamed = Streams.runToMemory(Streams.intervalJoinStream(eventsStream),
+        OutputMode.Append())
       .orderBy("click_id", "purchase_id")
       .as[(Long, Long, Long)].collect().toSeq
     val e = graft.sources.Tables(spark, sfDir, "events")
@@ -506,9 +512,7 @@ class EngineSpec extends SparkSpec {
     val stream = spark.readStream.schema(schema).parquet(s"$tmp/docs")
       .withColumn("ts", timestamp_micros((col("doc_id") + 86400L) * 1000000L))
     val cands = Streams.simhashCandidatesStream(stream, "doc_id", "text", "ts")
-    val got = Streams.runToMemory(cands,
-        s"graft_stream_simhash_${System.nanoTime()}",
-        org.apache.spark.sql.streaming.OutputMode.Append())
+    val got = Streams.runToMemory(cands, OutputMode.Append())
       .select("id_a", "id_b", "hamming").distinct()
       .as[(Long, Long, Int)].collect().toSet
     val batch = graft.dedup.Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 6)
@@ -530,8 +534,7 @@ class EngineSpec extends SparkSpec {
       .withColumn("ts", timestamp_micros((col("doc_id") + 86400L) * 1000000L))
     val got = Streams.runToMemory(
         Streams.neardupStreamDf(stream, "doc_id", "text", "ts"),
-        s"graft_neardup_${System.nanoTime()}",
-        org.apache.spark.sql.streaming.OutputMode.Append())
+        OutputMode.Append())
       .select("keep_id").as[Long].collect().toSet
     // twins (3,10) → 3 wins (earlier event time); twins (7,8) → 7 wins
     assert(got == Set(3L, 7L))
@@ -561,6 +564,48 @@ class EngineSpec extends SparkSpec {
   }
 
   private def ts(hhmm: String) = s"2024-01-01 $hhmm:00"
+  private def us(hhmm: String) = java.sql.Timestamp.valueOf(ts(hhmm)).getTime * 1000L
+
+  /** Event rows (event_id, user_id, event_type, hh:mm). */
+  private def eventRows(rows: (Long, Long, String, String)*) =
+    rows.toSeq.toDF("event_id", "user_id", "event_type", "s")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("s")).as("ts"))
+
+  test("runToMemory leaves no temp view behind, and its rows still read") {
+    val watch = java.nio.file.Files.createTempDirectory("graft_mem_sink").toString
+    writeMicroBatches(watch, Seq((1L to 10L).toDF("id"), (11L to 20L).toDF("id")))
+    def views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val before = views
+    val got = Streams.runToMemory(microBatchStream(watch), OutputMode.Append())
+    assert(views == before)
+    assert(got.as[Long].collect().sorted.toSeq == (1L to 20L))
+  }
+
+  test("streaming dedupe drops a key re-delivered in a later micro-batch") {
+    // batch 2 re-delivers event 1 inside the 60-minute watermark
+    // (watermark after batch 1: 10:05 - 60 min)
+    val watch = java.nio.file.Files.createTempDirectory("graft_redeliver").toString
+    writeMicroBatches(watch, Seq(
+      eventRows((1L, 7L, "click", ts("10:00")), (2L, 7L, "view", ts("10:05"))),
+      eventRows((1L, 7L, "click", ts("10:00")), (3L, 8L, "click", ts("10:20")))))
+    val got = Streams.runToMemory(Streams.dedupeStreamDf(microBatchStream(watch)),
+        OutputMode.Append())
+      .select("event_id").as[Long].collect().sorted.toSeq
+    assert(got == Seq(1L, 2L, 3L))
+  }
+
+  test("interval join matches a click to a purchase in a later micro-batch, within 1 h only") {
+    // user 7 buys 20 min after the click; user 8 buys 65 min after it
+    val watch = java.nio.file.Files.createTempDirectory("graft_interval").toString
+    writeMicroBatches(watch, Seq(
+      eventRows((1L, 7L, "click", ts("10:00")), (2L, 8L, "click", ts("10:00"))),
+      eventRows((3L, 7L, "purchase", ts("10:20")), (4L, 8L, "purchase", ts("11:05")))))
+    val got = Streams.runToMemory(Streams.intervalJoinStream(microBatchStream(watch)),
+        OutputMode.Append())
+      .as[(Long, Long, Long)].collect().toSeq
+    assert(got == Seq((1L, 3L, us("10:20") - us("10:00"))))
+  }
 
   test("sessionize bridges an in-watermark out-of-order event across micro-batches") {
     // The regression the interval-set rework fixed: batch 1 carries
@@ -580,10 +625,8 @@ class EngineSpec extends SparkSpec {
       ev((2L, ts("13:00")))))
     val got = Streams.runToMemory(
         Streams.sessionizeStreamDf(microBatchStream(watch)),
-        s"graft_ooo_sess_${System.nanoTime()}",
-        org.apache.spark.sql.streaming.OutputMode.Append())
+        OutputMode.Append())
       .as[(Long, Long, Long, Long)].collect().toSet
-    def us(hhmm: String) = java.sql.Timestamp.valueOf(ts(hhmm)).getTime * 1000L
     assert(got == Set((1L, us("10:00"), us("10:45"), 3L)),
       s"got $got — session split or bounds corrupted by out-of-order arrival")
   }
@@ -606,8 +649,7 @@ class EngineSpec extends SparkSpec {
       docs((3L, dup, ts("12:50")))))
     val got = Streams.runToMemory(
         Streams.neardupStreamDf(microBatchStream(watch), "doc_id", "text", "ts"),
-        s"graft_ooo_nd_${System.nanoTime()}",
-        org.apache.spark.sql.streaming.OutputMode.Append())
+        OutputMode.Append())
       .as[(Long, String)].collect()
     assert(got.groupBy(_._2).forall(_._2.length == 1),
       s"duplicate survivor emitted for one signature: ${got.toSeq}")
@@ -632,8 +674,7 @@ class EngineSpec extends SparkSpec {
     val got = Streams.runToMemory(
         Streams.neardupStreamDf(microBatchStream(watch), "doc_id", "text", "ts",
           finalizeByWatermark = true),
-        s"graft_wm_nd_${System.nanoTime()}",
-        org.apache.spark.sql.streaming.OutputMode.Append())
+        OutputMode.Append())
       .as[(Long, String)].collect()
     // 99's signature never finalizes (watermark stops at 11:00 < 12:00)
     assert(got.map(_._1).toSeq == Seq(3L), s"got ${got.toSeq}")
@@ -641,14 +682,15 @@ class EngineSpec extends SparkSpec {
 
   test("streaming sessionize drives a distributed file sink (no driver collect)") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream_sink").toString
-    val path = Streams.runToFileSink(Streams.sessionizeStream(spark, sfDir), tmp)
+    val path = Streams.runToFileSink(Streams.sessionizeStreamDf(eventsStream), tmp)
     val back = spark.read.parquet(path)
     assert(back.count() > 0)
     assert(back.columns.toSet == Set("user_id", "start_us", "end_us", "n_events"))
   }
 
   test("streaming dedupe: unique keys pass through exactly once") {
-    val streamed = Streams.dedupeStream(spark, sfDir)
+    val streamed = Streams.runToMemory(Streams.dedupeStreamDf(eventsStream),
+      OutputMode.Append())
     val batchDistinct = graft.sources.Tables(spark, sfDir, "events")
       .select("event_id").distinct().count()
     assert(streamed.count() == batchDistinct)
