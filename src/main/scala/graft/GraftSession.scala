@@ -77,7 +77,13 @@ object GraftSession {
     * pagerank, components…) checkpoint their RESULT, which must outlive
     * the query but not the next one; otherwise one block set per query
     * (or per rep) accumulates into GC pressure that inflates later
-    * timings. */
-  def unpersistAll(s: SparkSession): Unit =
+    * timings. Dataset caches (the catalog snapshot, cooccur's item
+    * dictionary) are cleared from the cache manager first: unpersisting
+    * only their RDDs would leave the cache entries behind, so a later
+    * `persist()` of the same plan would be a no-op and every read would
+    * recompute through blocks that are never stored again. */
+  def unpersistAll(s: SparkSession): Unit = {
+    s.catalog.clearCache()
     s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  }
 }

@@ -258,12 +258,12 @@ object Graph {
     // PINNED (by design, same contract as Curation.dsirWeights): the
     // vocabulary-sized MEMORY_AND_DISK blocks stay cached until the
     // session ends or the caller runs the standard post-query hygiene
-    // (spark.sparkContext.getPersistentRDDs.values.foreach(
-    // _.unpersist(false)) once the result is consumed — what Bench and
-    // Verify do). A long-lived session calling this repeatedly WITHOUT
-    // that hygiene accumulates one dict block set per call; there is
-    // no in-plan release point because the blocks must outlive the
-    // (lazy) query that reads them.
+    // (GraftSession.unpersistAll: spark.catalog.clearCache(), then
+    // unpersist every remaining persistent RDD) once the result is
+    // consumed — what Bench and Verify do). A long-lived session
+    // calling this repeatedly WITHOUT that hygiene accumulates one dict
+    // block set per call; there is no in-plan release point because
+    // the blocks must outlive the (lazy) query that reads them.
     val dict = edges.select(col(itemCol).as("__item"))
       .where(col("__item").isNotNull)
       .distinct()

@@ -2,6 +2,7 @@ package graft.catalog
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.sources.Tables
 
 /** Dataset catalog — the reference's `datasets.py` front door re-expressed
@@ -17,14 +18,25 @@ import graft.sources.Tables
   *
   * Scale notes: nation/region are classic broadcast dims (25/5 rows —
   * broadcast() hinted so the plan never shuffles the fact side for them).
-  * The orders↔customer join shuffles on the join key only; at 100 TB both
-  * sides partition on custkey and AQE handles skew. All summaries are
-  * partial-aggregated map-side before the shuffle.
+  * The coverage digest (distinct orders custkey × year) joins customer by
+  * a shuffle hash join on custkey: it grows with the order fact, so it is
+  * never broadcast. All summaries are partial-aggregated map-side before
+  * the shuffle.
+  *
+  * [[catalog]] is a snapshot, like the reference's table read once per
+  * process: it is persisted lazily (MEMORY_AND_DISK), filled by its first
+  * action, and every later call on the same frame scans the cached
+  * columns instead of re-joining orders. The snapshot stays distributed
+  * as block-manager blocks and grows with customers × years; nothing is
+  * held on the driver. `cat.unpersist()` releases it; a snapshot taken
+  * before the tables change keeps serving the old rows until then.
   */
 object Catalog {
 
-  /** The catalog as a lazy DataFrame: state, region, source_id,
-    * source_name, table_type, year. */
+  /** The catalog snapshot: state, region, source_id, source_name,
+    * table_type, year. Persisted lazily (no job runs here); the first
+    * action fills the cache, later calls on this frame reuse it, and
+    * `unpersist()` releases it. */
   def catalog(spark: SparkSession, dir: String): DataFrame = {
     val customer = Tables(spark, dir, "customer")
     val nation   = Tables(spark, dir, "nation")
@@ -33,10 +45,14 @@ object Catalog {
     // orders fact reduces to its distinct (custkey, year) pairs BEFORE
     // the join — at 100 TB this is the difference between joining the
     // order fact and joining a per-customer-year digest (the distinct
-    // partial-aggregates map-side first).
+    // partial-aggregates map-side first). The shuffle_hash hint keeps
+    // AQE from broadcasting the digest once it measures it small: it
+    // is corpus-side, and a cached plan would pin the broadcast
+    // relation on the driver.
     val coverage = Tables(spark, dir, "orders")
       .select(col("o_custkey"), year(col("o_orderdate")).cast("long").as("year"))
       .distinct()
+      .hint("shuffle_hash")
     customer
       .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
       .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
@@ -48,6 +64,7 @@ object Catalog {
         col("c_name").as("source_name"),
         col("c_mktsegment").as("table_type"),
         col("year"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   // ---- catalog build/reload from CSV (datasets.py:32 _build, :94

@@ -13,12 +13,14 @@ import org.apache.spark.sql.functions._
   * data_loaders/combine_dataset.py `CombinedDataset` (schema-aligned
   * union of several datasets).
   *
-  * Scale notes: every function returns an unevaluated DataFrame, so date
-  * and agency predicates reach the parquet scan as PushedFilters and
-  * column selection prunes the read schema. Paging is ORDER BY a unique
-  * key + offset/limit (Spark's GlobalLimit/Offset), the declarative
-  * analogue of the reference's limit/offset record batching
-  * (data_loader.py:381 `_setup_records_request`).
+  * Scale notes: load, paging and the summaries return unevaluated
+  * DataFrames, so date and agency predicates reach the parquet scan as
+  * PushedFilters and column selection prunes the read schema. Paging is
+  * ORDER BY a unique key + offset/limit (Spark's GlobalLimit/Offset), the
+  * declarative analogue of the reference's limit/offset record batching
+  * (data_loader.py:381 `_setup_records_request`). [[loadIter]] is the
+  * exception: each page is fetched by one job and handed back as a local
+  * frame of at most `chunk` rows held on the driver.
   */
 object Sources {
 
@@ -129,6 +131,12 @@ object Sources {
     * contract) regardless of key sparsity/skew, and every page is an
     * independent pruned scan (no global offset skip at 100 TB).
     *
+    * Each page is fetched by ONE Spark job, like the reference's one
+    * request per batch: the job collects `chunk + 1` rows, and the page
+    * comes back as a local DataFrame of the first `chunk` of them, whose
+    * actions run no further job. So at most `chunk + 1` rows are held on
+    * the driver at a time; size `chunk` for driver memory.
+    *
     * The sort key must be integral, NON-NULL, and UNIQUE — all three
     * fail fast: type at construction; a null key or a duplicate key
     * spanning a page boundary with a named error on the page that hits
@@ -145,35 +153,34 @@ object Sources {
     require(integral,
       s"loadIter: sort key '$sortKey' must be integral, got ${field.dataType}")
     require(chunk > 0, "loadIter: chunk must be positive")
+    val k = df.schema.fieldIndex(sortKey)
     new Iterator[DataFrame] {
       private var lastSeen: Option[Long] = None // None = first page
       private var exhausted = false
       private var nextPage: Option[(DataFrame, Long, Int)] = None
       private def fetch(): Unit = if (nextPage.isEmpty && !exhausted) {
-        val base = lastSeen.map(k => df.filter(col(sortKey) > k)).getOrElse(df)
-        val page = base.orderBy(col(sortKey)).limit(chunk)
-        // One driver action per page to learn the page's last key (the
-        // reference's load_iter is likewise one request per batch).
-        // chunk+1 keys: the extra row detects a duplicate key at the
+        val base = lastSeen.map(v => df.filter(col(sortKey) > v)).getOrElse(df)
+        // chunk+1 rows: the extra row detects a duplicate key at the
         // page boundary, which the `> lastSeen` filter would skip.
-        val keys = base.orderBy(col(sortKey)).limit(chunk + 1)
-          .select(col(sortKey).cast("long")).collect()
-        if (keys.isEmpty) { exhausted = true }
+        val rows = base.orderBy(col(sortKey)).limit(chunk + 1).collect()
+        if (rows.isEmpty) { exhausted = true }
         else {
-          val pageKeys = keys.take(chunk)
+          val pageRows = rows.take(chunk)
+          def key(i: Int): Long = rows(i).getAs[Number](k).longValue
           // nulls sort first in ascending order, so the first page
           // catches them — fail with a named error, not ROW_VALUE_IS_NULL
-          if (pageKeys.exists(_.isNullAt(0)))
+          if (pageRows.exists(_.isNullAt(k)))
             throw new IllegalArgumentException(
               s"loadIter: sort key '$sortKey' contains nulls — keyset " +
                 "pagination needs a non-null unique key")
-          if (keys.length == chunk + 1 &&
-              keys(chunk - 1).getLong(0) == keys(chunk).getLong(0))
+          if (rows.length == chunk + 1 && key(chunk - 1) == key(chunk))
             throw new IllegalArgumentException(
               s"loadIter: sort key '$sortKey' is not unique at a page " +
-                s"boundary (duplicate key ${keys(chunk).getLong(0)}) — " +
+                s"boundary (duplicate key ${key(chunk)}) — " +
                 "rows would be silently skipped")
-          nextPage = Some((page, pageKeys.last.getLong(0), pageKeys.length))
+          val page = df.sparkSession.createDataFrame(
+            java.util.Arrays.asList(pageRows: _*), df.schema)
+          nextPage = Some((page, key(pageRows.length - 1), pageRows.length))
         }
       }
       def hasNext: Boolean = { fetch(); nextPage.nonEmpty }
@@ -274,19 +281,29 @@ object Sources {
             agency: Option[(String, String)] = None): Long =
     load(df, date, agency).count()
 
-  /** Distinct years of the date field, sorted (data.py:885 get_years). */
+  /** Distinct years of the date field, sorted, a NULL year first
+    * (data.py:885 get_years). See [[sortedDistinct]] for the plan. */
   def getYears(df: DataFrame, dateField: String): DataFrame =
-    df.select(year(col(dateField)).cast("long").as("yr")).distinct().orderBy("yr")
+    sortedDistinct(df.select(year(col(dateField)).cast("long").as("yr")))
 
-  /** Distinct agency values, sorted, optionally restricted to a
-    * case-insensitive partial name (data.py:963 get_agencies
-    * partial_name parameter). */
+  /** Distinct agency values, sorted, a NULL agency first, optionally
+    * restricted to a case-insensitive partial name (data.py:963
+    * get_agencies partial_name parameter). See [[sortedDistinct]]. */
   def getAgencies(df: DataFrame, agencyField: String,
                   partialName: Option[String] = None): DataFrame = {
     val base = partialName
       .map(p => df.filter(agencyFilter(col(agencyField), p))).getOrElse(df)
-    base.select(col(agencyField).as("agency")).distinct().orderBy("agency")
+    sortedDistinct(base.select(col(agencyField).as("agency")))
   }
+
+  /** The distinct rows of a one-column frame in ascending order, NULL
+    * first. `distinct` shuffles by value, then the already-distinct rows
+    * move to ONE partition and sort there: that single-partition step is
+    * bounded by the number of distinct values (years, agencies), never
+    * by the input rows. A global `orderBy` would add a range-partition
+    * sampling job to sort a result that small. */
+  private def sortedDistinct(one: DataFrame): DataFrame =
+    one.distinct().repartition(1).sortWithinPartitions(one.columns.head)
 
   /** `CombinedDataset` (combine_dataset.py): union datasets with
     * schema alignment — missing columns become nulls. */

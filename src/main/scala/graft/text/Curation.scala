@@ -567,11 +567,11 @@ object Curation {
     * feature pass three times and mis-planned the build side), and the
     * checkpoint's MEMORY_AND_DISK blocks stay pinned until the session
     * ends or the caller runs the standard post-query hygiene
-    * (`spark.sparkContext.getPersistentRDDs.values.foreach(
-    * _.unpersist(false))` once the result is consumed — what Bench and
-    * Verify do). A long-lived session calling dsirWeights repeatedly
-    * WITHOUT that hygiene accumulates one vocabulary-sized block set
-    * per call.
+    * ([[graft.GraftSession.unpersistAll]]: clear the Dataset cache,
+    * then unpersist every remaining persistent RDD) once the result is
+    * consumed — what Bench and Verify do). A long-lived session calling
+    * dsirWeights repeatedly WITHOUT that hygiene accumulates one
+    * vocabulary-sized block set per call.
     *
     * Returns (idCol, is_target, n_feats, logw). */
   def dsirWeights(docs: DataFrame, idCol: String, textCol: String,

@@ -69,6 +69,75 @@ class EngineSpec extends SparkSpec {
     assert(viaPivot == direct)
   }
 
+  // Final AQE plans, query stages and all.
+  private object Adaptive
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+  private def readsTable(p: org.apache.spark.sql.execution.SparkPlan, t: String) =
+    Adaptive.collect(p) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == s"$t.parquet") => s
+    }.nonEmpty
+  private def cachedScans(df: org.apache.spark.sql.DataFrame) =
+    Adaptive.collect(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
+    }
+  // block updates reach the status store through the listener bus
+  private def storedRdds = {
+    org.apache.spark.graftest.Bus.drain(spark.sparkContext)
+    spark.sparkContext.getRDDStorageInfo
+  }
+
+  test("catalog snapshot: after one action, query scans the cache, not orders") {
+    val cat = Catalog.catalog(spark, sfDir)
+    try {
+      assert(cat.count() > 0)
+      // a non-empty answer: AQE folds an empty one to an EmptyRelation
+      val q = Catalog.query(cat, state = Some("NATION_3"), tableType = Some("AUTOMOBILE"))
+      assert(q.collect().length == 2)
+      val plan = q.queryExecution.executedPlan
+      assert(cachedScans(q).nonEmpty, s"expected an InMemoryTableScan:\n$plan")
+      assert(!readsTable(plan, "orders"), s"query must not rescan orders:\n$plan")
+    } finally cat.unpersist()
+  }
+
+  test("catalog plan joins the coverage digest without a broadcast") {
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    val cat = Catalog.catalog(spark, sfDir)
+    try {
+      cat.count()
+      val built = cachedScans(Catalog.numSources(cat)).head.relation.cacheBuilder.cachedPlan
+      assert(readsTable(built, "orders"), built)
+      val broadcasts = Adaptive.collect(built) { case b: BroadcastExchangeLike => b }
+      assert(broadcasts.nonEmpty && broadcasts.forall(b => !readsTable(b, "orders")),
+        s"only the nation/region dims may be broadcast:\n$built")
+      assert(Adaptive.collect(built) { case j: ShuffledHashJoinExec => j }
+        .exists(readsTable(_, "orders")), s"coverage join must shuffle:\n$built")
+    } finally cat.unpersist()
+  }
+
+  test("cat.unpersist() releases the catalog snapshot's blocks") {
+    GraftSession.unpersistAll(spark)
+    val cat = Catalog.catalog(spark, sfDir)
+    cat.count()
+    assert(storedRdds.nonEmpty, "the first action fills the snapshot")
+    cat.unpersist()
+    assert(storedRdds.isEmpty)
+  }
+
+  test("unpersistAll drops Dataset cache entries, so a re-persist stores again") {
+    def plan = spark.range(0, 5000).selectExpr("id % 17 AS k").distinct()
+    GraftSession.unpersistAll(spark)
+    val first = plan.persist()
+    assert(first.count() == 17 && storedRdds.nonEmpty)
+    GraftSession.unpersistAll(spark)
+    assert(storedRdds.isEmpty)
+    val again = plan.persist()
+    try assert(again.count() == 17 && storedRdds.nonEmpty,
+      "a stale cache entry made the second persist a no-op")
+    finally GraftSession.unpersistAll(spark)
+  }
+
   test("dataset version gating mirrors _check_version") {
     import spark.implicits._
     val cat = Seq(

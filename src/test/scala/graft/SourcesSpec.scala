@@ -180,6 +180,62 @@ class SourcesSpec extends SparkSpec {
     assert(Sources.loadIter(dupInside, "k", 3).map(_.count()).sum == 4)
   }
 
+  test("loadIter fetches each page with exactly one Spark job") {
+    var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs += 1
+    }
+    def drain(): Unit = org.apache.spark.graftest.Bus.drain(spark.sparkContext)
+    val e = Tables(spark, sfDir, "events").select("event_id", "ts")
+    val it = Sources.loadIter(e, "event_id", 100)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (p <- 1 to 3) {
+        drain()
+        val before = jobs
+        val rows = it.next().collect()
+        drain()
+        assert(rows.length == 100 && jobs - before == 1, s"page $p ran ${jobs - before} jobs")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("loadIter pages concatenate to orderBy(key), for Int and Long keys") {
+    val e = Tables(spark, sfDir, "events").filter(col("event_id") < 300)
+      .select("event_id", "event_type", "ts")
+    for (key <- Seq(e, e.withColumn("event_id", col("event_id").cast("int")))) {
+      val want = key.orderBy("event_id").collect().toSeq
+      val got = Sources.loadIter(key, "event_id", 37).flatMap(_.collect()).toSeq
+      assert(got == want)
+      assert(Sources.loadIter(key, "event_id", 37).next().schema == key.schema)
+    }
+  }
+
+  test("getYears / getAgencies: NULL first, empty and single-row frames unchanged") {
+    import spark.implicits._
+    // the output of the global-sort form these functions replace
+    def sortedForm(df: org.apache.spark.sql.DataFrame) =
+      df.distinct().orderBy(df.columns.head).collect().toSeq
+    val dates = Seq("2020-01-05", null, "2019-03-01", "2020-07-01", null)
+      .toDF("d").select(to_timestamp(col("d")).as("d"))
+    for (df <- Seq(dates, dates.limit(0), dates.filter(col("d").isNotNull).limit(1))) {
+      val got = getYears(df, "d")
+      assert(got.columns.toSeq == Seq("yr"))
+      assert(got.collect().toSeq == sortedForm(df.select(year(col("d")).cast("long").as("yr"))))
+    }
+    assert(getYears(dates, "d").collect().map(r => Option(r.get(0))).toSeq ==
+      Seq(None, Some(2019L), Some(2020L)))
+    val ag = Seq("Austin", null, "Dallas", "Austin", "dallas").toDF("agency")
+    for (df <- Seq(ag, ag.limit(0), ag.limit(1))) {
+      assert(getAgencies(df, "agency").collect().toSeq == sortedForm(df))
+    }
+    assert(getAgencies(ag, "agency").collect().map(r => Option(r.getString(0))).toSeq ==
+      Seq(None, Some("Austin"), Some("Dallas"), Some("dallas")))
+    assert(getAgencies(ag, "agency", Some("DAL")).collect().map(_.getString(0)).toSeq ==
+      Seq("Dallas", "dallas"))
+  }
+
   test("mergeRelated joins related tables on the incident id") {
     val orders = Tables(spark, sfDir, "orders").select("o_orderkey", "o_orderdate")
       .withColumnRenamed("o_orderkey", "incident_id").limit(50)
